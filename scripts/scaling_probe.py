@@ -44,6 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from scripts.query_profile import load_tables, warm_up
 from test_dataengineer2026_spark import registry
 from test_dataengineer2026_spark.session import get_session
 
@@ -208,12 +209,7 @@ def main() -> None:
     ks = parse_args()
     spark = get_session("scaling-probe", shuffle_partitions=32)
     qs = registry.queries()
-    # warmup: JVM/codegen + streaming engine + Python worker pool
-    qs["A1_group_agg"](spark, BASE).write.format("noop").mode("overwrite").save()
-    qs["M2_tumbling_window"](spark, BASE).write.format("noop").mode("overwrite").save()
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, BASE)
     results: dict[int, dict[str, float]] = {}
     byte_mult: dict[int, float] = {}
     base_bytes = None
@@ -227,6 +223,7 @@ def main() -> None:
             # document bytes superlinearly (measured 49.5x at K=30).
             base_bytes = doc_bytes if k == 1 else _doc_bytes(spark, BASE)
         byte_mult[k] = round(doc_bytes / base_bytes, 1)
+        load_tables(spark, sf_dir)  # untimed at every K, as warm_up did at K=1
         timings = time_queries(spark, qs, sf_dir)
         results[k] = timings
         print(json.dumps({

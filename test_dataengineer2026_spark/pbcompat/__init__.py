@@ -46,12 +46,13 @@ def available() -> bool:
     return spec is not None and spec.origin is not None
 
 
-def _export_pythonpath(spark=None) -> None:
+def export_pythonpath(path: str, spark=None) -> None:
+    """Prepend ``path`` to ``PYTHONPATH`` for interpreters this process
+    or its JVM starts later, and, given a live session, for the Python
+    workers of that SparkContext. Idempotent."""
     prev = os.environ.get("PYTHONPATH", "")
-    if _HERE not in prev.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            _HERE + (os.pathsep + prev if prev else "")
-        )
+    if path not in prev.split(os.pathsep):
+        os.environ["PYTHONPATH"] = path + (os.pathsep + prev if prev else "")
     if spark is not None:
         # sc.environment is checked and set INDEPENDENTLY of
         # os.environ: a JVM launched before the os.environ export never
@@ -61,8 +62,8 @@ def _export_pythonpath(spark=None) -> None:
         # context's Python workers (r15 review finding).
         env = spark.sparkContext.environment
         wprev = env.get("PYTHONPATH", "")
-        if _HERE not in (wprev or "").split(os.pathsep):
-            env["PYTHONPATH"] = _HERE + (os.pathsep + wprev if wprev else "")
+        if path not in (wprev or "").split(os.pathsep):
+            env["PYTHONPATH"] = path + (os.pathsep + wprev if wprev else "")
 
 
 def ensure(spark=None) -> bool:
@@ -77,5 +78,5 @@ def ensure(spark=None) -> bool:
             runpy.run_path(sc_path)
         except Exception:
             pass
-    _export_pythonpath(spark)
+    export_pythonpath(_HERE, spark)
     return available()

@@ -11,6 +11,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+from test_dataengineer2026_spark.pbcompat import export_pythonpath
+
+#: Directory holding the package: Python workers import the package from
+#: here when a UDF is unpickled, whatever the driver's working directory.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 #: Configs applied to every session we build, and defensively re-applied
 #: (runtime-settable subset) to sessions handed to us by the harness.
 RUNTIME_CONFS: dict[str, str] = {
@@ -107,6 +113,7 @@ def get_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    export_pythonpath(_PACKAGE_ROOT, spark)
     apply_runtime_confs(spark)
     # getOrCreate may return a pre-existing session whose builder configs
     # were ignored — re-apply the explicit sizing so the parameter always

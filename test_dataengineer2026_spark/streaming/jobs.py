@@ -296,11 +296,14 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 class MetricsListener:
     """StreamingQueryListener capturing per-batch progress for the
-    observability surface (M12): input row counts, watermark drop counts
-    from the state operators, and ``df.observe`` metrics. Listener
-    callbacks run on the engine's listener-bus thread, so completion is
-    signalled via the terminated event and awaited with a bounded
-    spin-wait, never assumed."""
+    observability surface (M12) and the query profiler: input row
+    counts, the ``durationMs`` phase breakdown, state-operator metrics
+    (watermark drops, rows, commit/update/removal times, memory), and
+    ``df.observe`` metrics. It also records the run id of every query
+    it saw start, which is the job group Spark runs that stream's jobs
+    under. Listener callbacks run on the engine's listener-bus thread,
+    so completion is signalled via the terminated events and awaited
+    with a bounded spin-wait, never assumed."""
 
     def __init__(self) -> None:
         from pyspark.sql.streaming import StreamingQueryListener
@@ -309,13 +312,24 @@ class MetricsListener:
 
         class _L(StreamingQueryListener):
             def onQueryStarted(self, event):
-                pass
+                outer.run_ids.append(str(event.runId))
 
             def onQueryProgress(self, event):
                 p = event.progress
-                dropped = sum(
-                    op.numRowsDroppedByWatermark for op in p.stateOperators
-                )
+                state_ops = [
+                    {
+                        "op": op.operatorName,
+                        "rows_total": op.numRowsTotal,
+                        "rows_updated": op.numRowsUpdated,
+                        "rows_removed": op.numRowsRemoved,
+                        "dropped_by_watermark": op.numRowsDroppedByWatermark,
+                        "commit_ms": op.commitTimeMs,
+                        "updates_ms": op.allUpdatesTimeMs,
+                        "removals_ms": op.allRemovalsTimeMs,
+                        "mem_bytes": op.memoryUsedBytes,
+                    }
+                    for op in p.stateOperators
+                ]
                 observed = {
                     name: row.asDict()
                     for name, row in (p.observedMetrics or {}).items()
@@ -324,7 +338,11 @@ class MetricsListener:
                     {
                         "batch_id": p.batchId,
                         "num_input_rows": p.numInputRows,
-                        "dropped_by_watermark": dropped,
+                        "dropped_by_watermark": sum(
+                            op["dropped_by_watermark"] for op in state_ops
+                        ),
+                        "duration_ms": dict(p.durationMs),
+                        "state_ops": state_ops,
                         "observed": observed,
                     }
                 )
@@ -333,10 +351,11 @@ class MetricsListener:
                 pass
 
             def onQueryTerminated(self, event):
-                outer.terminated = True
+                outer.terminated += 1
 
         self.progress: list[dict] = []
-        self.terminated = False
+        self.run_ids: list[str] = []
+        self.terminated = 0
         self._listener = _L()
 
     def attach(self, spark: SparkSession) -> None:
@@ -346,10 +365,14 @@ class MetricsListener:
         spark.streams.removeListener(self._listener)
 
     def await_terminated(self, timeout_sec: float = 60.0) -> None:
+        """Wait until every query seen to start (at least one) has
+        delivered its terminated event. Spark posts a query's progress
+        events before its terminated event, so after this returns
+        ``progress`` holds every batch of those queries."""
         import time
 
         t0 = time.monotonic()
-        while not self.terminated:
+        while self.terminated < max(1, len(self.run_ids)):
             if time.monotonic() - t0 > timeout_sec:
                 raise TimeoutError(
                     "streaming listener never saw query termination"
@@ -429,16 +452,17 @@ def run_to_memory(
 
     Both confs are session-level; they are set just before start and
     restored after termination. Bounded availableNow runs are sequential
-    here — asserted below so a future concurrent caller fails loudly
+    here — checked below so a future concurrent caller fails loudly
     instead of having its conf silently clobbered mid-stream (r18
     advisor).
     """
     spark = stream_df.sparkSession
     active = spark.streams.active
-    assert not active, (
-        f"run_to_memory mutates session-wide streaming confs and must "
-        f"not run concurrently with active streams: {[q.name for q in active]}"
-    )
+    if active:
+        raise RuntimeError(
+            f"run_to_memory mutates session-wide streaming confs and must "
+            f"not run concurrently with active streams: {[q.name for q in active]}"
+        )
     restore: list[tuple[str, str | None]] = []
 
     def _set(key: str, value: str) -> None:
@@ -494,23 +518,25 @@ def run_to_memory_until(
 
     spark = stream_df.sparkSession
     active = spark.streams.active
-    assert not active, (
-        f"run_to_memory_until mutates session-wide streaming confs and "
-        f"must not run concurrently with active streams: "
-        f"{[q.name for q in active]}"
-    )
+    if active:
+        raise RuntimeError(
+            f"run_to_memory_until mutates session-wide streaming confs and "
+            f"must not run concurrently with active streams: "
+            f"{[q.name for q in active]}"
+        )
     conf_key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(conf_key, None)
     if shuffle_partitions is not None:
         spark.conf.set(conf_key, str(shuffle_partitions))
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = None
     try:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
         deadline = time.time() + timeout_s
         while spark.table(name).count() < expected_rows:
             if q.awaitTermination(0.5):
@@ -522,10 +548,13 @@ def run_to_memory_until(
                     f"after {timeout_s}s"
                 )
     finally:
-        if q.isActive:
+        if q is not None and q.isActive:
             q.stop()
-        if shuffle_partitions is not None and old is not None:
-            spark.conf.set(conf_key, old)
+        if shuffle_partitions is not None:
+            if old is None:
+                spark.conf.unset(conf_key)
+            else:
+                spark.conf.set(conf_key, old)
     return spark.table(name)
 
 

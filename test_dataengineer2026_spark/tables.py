@@ -73,14 +73,17 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def clear_cache(spark: SparkSession) -> None:
-    """Drop the per-session base-relation memo.
+    """Drop the per-session base-relation memo and the per-process
+    layout memo behind ``table_rows``/``widen_if_narrow``.
 
     ``load`` assumes parquet under a given sf_dir is immutable for the
     life of the driver process; call this after regenerating files in
-    place so subsequent loads re-read the footers (r8 advisor note —
-    the harness always regenerates into a fresh process, but external
-    users of ``tables.load`` may not)."""
+    place so subsequent loads and layout reads re-read the footers (r8
+    advisor note — the harness always regenerates into a fresh process,
+    but external users of ``tables.load`` may not). Both memos rest on
+    that one assumption, so they are invalidated together."""
     getattr(spark, "_graft_table_cache", {}).clear()
+    _LAYOUT_CACHE.clear()
 
 
 def parallelize(df: DataFrame, key: str | None = None) -> DataFrame:

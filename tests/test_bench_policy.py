@@ -258,20 +258,6 @@ def test_compact_drops_optional_fields_when_oversized(tmp_path, monkeypatch):
     assert line["queries"] == queries
 
 
-def test_shuffle_audit_sums_complete_stages_only():
-    import sys, os
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    from shuffle_audit import stage_totals
-
-    stages = [
-        {"status": "COMPLETE", "shuffleReadBytes": 100, "shuffleWriteBytes": 40},
-        {"status": "SKIPPED", "shuffleReadBytes": 999, "shuffleWriteBytes": 999},
-        {"status": "COMPLETE", "shuffleWriteBytes": 60},  # missing read key
-        {"status": "ACTIVE", "shuffleReadBytes": 5, "shuffleWriteBytes": 5},
-    ]
-    assert stage_totals(stages) == (100, 100)
-
-
 def test_compact_survives_unwritable_sidecar(monkeypatch, capsys):
     """The stdout line is the driver's record; a sidecar write failure
     (disk full, read-only checkout) must degrade to line-only, never

@@ -92,3 +92,34 @@ def test_sitecustomize_in_fresh_interpreter():
     )
     assert r.returncode == 0, r.stderr[-500:]
     assert r.stdout.strip() == "0"
+
+
+def test_get_session_workers_import_package_from_any_cwd(tmp_path):
+    """A driver started outside the checkout must still run Python UDFs:
+    workers unpickle them by package import path, so ``get_session``
+    exports the package root to the workers' PYTHONPATH. The child gets
+    no inherited PYTHONPATH, so only that export can make the import
+    work."""
+    from tests.conftest import SF_DIR
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    code = (
+        "import sys; sys.path.insert(0, sys.argv[1]);"
+        "from test_dataengineer2026_spark import registry;"
+        "from test_dataengineer2026_spark.session import get_session;"
+        "spark = get_session('cwd-probe', shuffle_partitions=2);"
+        "df = registry.queries()['V5_mm_binary_features'](spark, sys.argv[2]);"
+        "print('ROWS', len(df.collect()))"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", code, root, SF_DIR],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-1500:]
+    assert "ROWS " in r.stdout and "ModuleNotFoundError" not in r.stderr

@@ -18,7 +18,10 @@ from test_dataengineer2026_spark import registry
 from test_dataengineer2026_spark.plans.audit import (
     audit,
     exchange_count,
+    execute,
     join_kinds,
+    node_metrics,
+    plan_nodes,
     plan_string,
 )
 from tests.conftest import SF_DIR_MID
@@ -1013,16 +1016,64 @@ def test_gr4_bfs_round_is_equi_join(spark):
     assert "ExistingRDD" in p_full or "Scan ExistingRDD" in p_full, p_full
 
 
+def _file_scans(df, table: str | None = None) -> list:
+    """FileSourceScanExec nodes of df's plan, optionally only those
+    reading a path that contains ``table``."""
+    return [
+        n
+        for n in plan_nodes(df)
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and (table is None or table in n.relation().location().rootPaths().mkString(","))
+    ]
+
+
 def test_s16_dynamic_partition_pruning_fires(spark):
     """S16: the day-partitioned fact scan must carry a `dynamicpruning`
     PartitionFilter fed by the dim's broadcast subquery — runtime
     partition pruning, not a full fact scan followed by a join filter.
-    The dim side keeps its static pushed filters (event_type, value)."""
-    p = plan_string(QS["S16_dynamic_partition_pruning"](spark, SF_DIR_MID), "simple")
-    assert "dynamicpruning" in p, p
-    scan_at = p.index("s16_events_by_day")
-    line = p[p.rfind("\n", 0, scan_at) : p.index("\n", scan_at)]
-    assert "PartitionFilters: [i" in line or "dynamicpruning" in p[scan_at : scan_at + 400], p
+    Read from the plan objects, not explain text, whose scan location
+    is truncated once the checkout path is long enough."""
+    df = QS["S16_dynamic_partition_pruning"](spark, SF_DIR_MID)
+    (fact,) = _file_scans(df, "s16_events_by_day")
+    filters = fact.partitionFilters().mkString(" | ")
+    assert "dynamicpruningexpression(" in filters, filters
+    assert "dynamicpruningexpression(true)" not in filters, filters
+    kinds = {n.getClass().getSimpleName() for n in plan_nodes(df)}
+    assert "SubqueryAdaptiveBroadcastExec" in kinds, kinds
+
+
+def _shuffle_bytes_written(df) -> int:
+    return sum(
+        node_metrics(n).get("shuffleBytesWritten", 0) for n in plan_nodes(df)
+    )
+
+
+def test_reused_exchange_shuffle_bytes_counted_once(spark):
+    """A self-join of one aggregation reuses its exchange: the walk must
+    see the ReusedExchangeExec and count the shuffle bytes once, i.e.
+    exactly what the aggregation alone writes."""
+    from test_dataengineer2026_spark import tables
+    from tests.conftest import SF_DIR
+
+    agg = (
+        tables.load(spark, SF_DIR, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(F.sum("l_quantity").alias("q"))
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # keep the sort-merge join: no broadcast
+    try:
+        assert execute(agg) > 0
+        alone = _shuffle_bytes_written(agg)
+        joined = agg.alias("a").join(agg.alias("b"), "l_orderkey")
+        assert execute(joined) > 0
+    finally:
+        spark.conf.set(key, old)
+    kinds = [n.getClass().getSimpleName() for n in plan_nodes(joined)]
+    assert "ReusedExchangeExec" in kinds, kinds
+    assert kinds.count("ShuffleExchangeExec") == 1, kinds
+    assert _shuffle_bytes_written(joined) == alone > 0
 
 
 # ---------------------------------------------------------------------------
@@ -1176,32 +1227,7 @@ def test_hive_partition_pruning(spark, tmp_path):
     # unpruned FileIndex. Pruning is a runtime property: execute and
     # read the scan's numFiles metric, which counts files actually
     # planned into the scan AFTER partition pruning.
-    # collect(), not count(): count() builds a NEW query execution on
-    # top and df's own plan (whose metrics we read) would never run
-    assert len(df.collect()) > 0
-    stack = [df._jdf.queryExecution().executedPlan()]
-    num_files = None
-    while stack:
-        node = stack.pop()
-        kind = node.getClass().getSimpleName()
-        if kind == "FileSourceScanExec":
-            it = node.metrics().iterator()
-            while it.hasNext():
-                kv = it.next()
-                if kv._1() == "numFiles":
-                    num_files = kv._2().value()
-        elif kind == "AdaptiveSparkPlanExec":
-            # AQE wrapper is a LEAF via children() — descend through
-            # the executed final plan (r12 advisor: without this,
-            # num_files stays None and the test fails confusingly if
-            # this plan ever ends up adaptive).
-            stack.append(node.finalPhysicalPlan())
-        for i in range(node.children().size()):
-            stack.append(node.children().apply(i))
-    assert num_files is not None, (
-        "no FileSourceScanExec reached in executedPlan traversal — "
-        "plan shape changed (new wrapper node?); re-derive the walk"
-    )
+    num_files = _executed_scan_num_files(df)
     n_click = len(list((tmp_path / "events.parquet").glob("event_type=click/*.parquet")))
     n_total = len(list((tmp_path / "events.parquet").glob("event_type=*/*.parquet")))
     assert n_click < n_total  # the layout actually has something to prune
@@ -1209,27 +1235,12 @@ def test_hive_partition_pruning(spark, tmp_path):
 
 
 def _executed_scan_num_files(df) -> int:
-    """Run df (collect — the only execution whose metrics df's own
-    QueryExecution carries) and return the FileSourceScanExec numFiles
-    metric, descending AQE wrappers."""
-    assert len(df.collect()) > 0
-    stack = [df._jdf.queryExecution().executedPlan()]
-    num_files = None
-    while stack:
-        node = stack.pop()
-        kind = node.getClass().getSimpleName()
-        if kind == "FileSourceScanExec":
-            it = node.metrics().iterator()
-            while it.hasNext():
-                kv = it.next()
-                if kv._1() == "numFiles":
-                    num_files = kv._2().value()
-        elif kind == "AdaptiveSparkPlanExec":
-            stack.append(node.finalPhysicalPlan())
-        for i in range(node.children().size()):
-            stack.append(node.children().apply(i))
-    assert num_files is not None, "no FileSourceScanExec in executedPlan"
-    return num_files
+    """Run df's own QueryExecution and return its one file scan's
+    numFiles metric (files planned into the scan after pruning)."""
+    assert execute(df) > 0
+    scans = _file_scans(df)
+    assert len(scans) == 1, [n.nodeName() for n in scans]
+    return node_metrics(scans[0]).get("numFiles", 0)
 
 
 def test_multilevel_hive_partition_pruning(spark, tmp_path):

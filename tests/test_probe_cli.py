@@ -3,18 +3,19 @@
 Round 8 hardened driver_replay.py after the judge hit a vacuous pass
 via an unparsed ``--help``; the same class of wart existed in the four
 remaining scripts — ``--help`` crashed scaling_probe/skew_probe with a
-bare ValueError, hung shuffle_audit behind a SparkSession boot, and
-made gen_coverage WRITE COVERAGE.md as a side effect. All assertions
-here go through ``parse_args`` only — no SparkSession.
+bare ValueError, hung the shuffle audit (now query_profile) behind a
+SparkSession boot, and made gen_coverage WRITE COVERAGE.md as a side
+effect. All assertions here go through ``parse_args`` only — no
+SparkSession.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from scripts import next_window, scaling_probe, shuffle_audit, skew_probe
+from scripts import next_window, query_profile, scaling_probe, skew_probe
 
-MODULES = [scaling_probe, skew_probe, shuffle_audit, next_window]
+MODULES = [scaling_probe, skew_probe, query_profile, next_window]
 
 
 @pytest.mark.parametrize("mod", MODULES, ids=lambda m: m.__name__)
@@ -51,9 +52,19 @@ def test_skew_probe_defaults_and_validation():
         assert exc.value.code == 2
 
 
-def test_shuffle_audit_prefixes_parsed():
-    assert shuffle_audit.parse_args([]).prefixes == []
-    assert shuffle_audit.parse_args(["A1", "J"]).prefixes == ["A1", "J"]
+def test_query_profile_args_parsed():
+    args = query_profile.parse_args([])
+    assert (args.prefixes, args.reps, args.out, args.plans_dir) == ([], 3, None, None)
+    args = query_profile.parse_args(
+        ["A1", "J", "--reps", "0", "--out", "p.jsonl", "--plans-dir", "d"]
+    )
+    assert (args.prefixes, args.reps, args.out, args.plans_dir) == (
+        ["A1", "J"], 0, "p.jsonl", "d"
+    )
+    for bad in (["--reps", "-1"], ["--reps", "two"]):
+        with pytest.raises(SystemExit) as exc:
+            query_profile.parse_args(bad)
+        assert exc.value.code == 2
 
 
 def test_next_window_stale_flag():

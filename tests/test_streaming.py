@@ -2144,6 +2144,32 @@ def test_run_to_memory_until_natural_termination_returns_final_sink(
     )
 
 
+@pytest.mark.parametrize("runner", ["run_to_memory", "run_to_memory_until"])
+def test_failed_start_restores_shuffle_partitions(spark, tmp_path, runner):
+    """A stream whose ``start()`` fails (complete mode without an
+    aggregation is rejected at analysis) must leave the session's
+    shuffle-partition conf exactly as it found it, not pinned to the
+    per-run state width."""
+    import pandas as pd
+
+    from test_dataengineer2026_spark.streaming import jobs
+
+    src = tmp_path / "src"
+    src.mkdir()
+    pd.DataFrame({"k": [1], "v": [10]}).to_parquet(src / "a.parquet")
+    s = spark.readStream.schema("k long, v long").parquet(str(src))
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    kwargs = {"expected_rows": 1} if runner == "run_to_memory_until" else {}
+    with pytest.raises(Exception, match="(?i)complete"):
+        getattr(jobs, runner)(
+            s, f"bad_start_{runner}", "complete",
+            shuffle_partitions=int(before) + 3, **kwargs,
+        )
+    assert spark.conf.get(key) == before
+    assert not spark.streams.active
+
+
 def test_processing_time_timers_fire_after_restart(spark, tmp_path):
     """Processing-time timer state is CHECKPOINT-DURABLE and fires
     across a query restart — the wall-clock mirror of the event-time

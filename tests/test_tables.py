@@ -54,6 +54,21 @@ def test_load_memoizes_and_clear_cache_resets(spark):
     tables.clear_cache(spark)
 
 
+def test_clear_cache_resets_table_rows_after_regeneration(spark, tmp_path):
+    """A table regenerated in place reports its new row count from
+    ``table_rows`` once ``clear_cache`` runs: the layout memo is
+    invalidated with the relation memo, not left stale."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tables.table_path(str(tmp_path), "region")
+    pq.write_table(pa.table({"r_regionkey": [0, 1, 2]}), path)
+    assert tables.table_rows(str(tmp_path), "region") == 3
+    pq.write_table(pa.table({"r_regionkey": list(range(7))}), path)
+    tables.clear_cache(spark)
+    assert tables.table_rows(str(tmp_path), "region") == 7
+
+
 def test_duck_view_sql_layouts(tmp_path):
     """r12 advisor pin for the now-shared layout detector: (1) a flat
     part FILE whose name contains '=' must NOT trigger hive
