@@ -12,7 +12,9 @@ slots behind the same interface a real extractor library would.
 
 Spark integration: ``pages_udf`` is a Pandas UDF over the binaryFile
 ``content`` column returning ARRAY<STRUCT<page,text>> — one Arrow batch
-per file group, parallelism = file count (SURVEY.md §4.3).
+per scan split; the binaryFile scan packs several small files into one
+split (``spark.sql.files.openCostInBytes``), so parallelism is the split
+count, not the file count (SURVEY.md §4.3).
 """
 
 from __future__ import annotations

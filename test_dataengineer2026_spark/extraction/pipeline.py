@@ -5,10 +5,14 @@ rows) -> EXTRACT (X3-X6) -> NORMALIZE/VALIDATE (X7-X9) -> SINK
 (JSON/CSV/Parquet, S6-S8). Lazy end-to-end: stages 1-5 are one Catalyst
 plan; the writes are the only actions.
 
-Scale (TEST.md:65, 1k-10k PDFs): parallelism = file count; binaryFile
-rows are ~MBs each so repartition by size keeps workers balanced;
-doc_id is a content hash (stable across re-runs, dedup-friendly) rather
-than a path or a monotonic id.
+Scale (TEST.md:65, 1k-10k PDFs): there is no repartition. The
+binaryFile scan packs whole files into splits of up to
+``spark.sql.files.maxPartitionBytes`` (128 MB), counting each file as
+its size plus ``spark.sql.files.openCostInBytes`` (4 MB), so small PDFs
+share a task, about 31 to a split: 212 files make 7 tasks. The parse
+UDF runs once per split, not once per file. doc_id is a content hash
+(stable across re-runs, dedup-friendly) rather than a path or a
+monotonic id.
 """
 
 from __future__ import annotations
@@ -39,9 +43,10 @@ def parse_pages(pdfs: DataFrame) -> DataFrame:
     return pages.select("doc_id", "path", F.col("pg.page").alias("page"), F.col("pg.text").alias("text"))
 
 
-def extract_all(pages: DataFrame) -> dict[str, DataFrame]:
-    """X3-X9: the four spec tables plus the quarantine stream."""
-    docs = X.doc_text(pages).cache()
+def extract_tables(docs: DataFrame) -> dict[str, DataFrame]:
+    """X3-X9: the four spec tables plus the quarantine stream, from
+    ``X.doc_text`` rows. Every table reads ``docs``; a caller computing
+    more than one caches it."""
     resources_raw = X.extract_resources(docs)
     reserves_raw = X.extract_reserves(docs)
     resources, res_quarantine = X.validate_split(resources_raw)
@@ -73,16 +78,22 @@ def run_corpus(
     an explicit opt-in, never the default (r17 verdict #5 — the old
     unconditional coalesce(1) made every corpus run single-threaded at
     the sink)."""
-    tables = extract_all(parse_pages(scan_pdfs(spark, input_dir)))
-    for name, df in tables.items():
-        out = df.coalesce(1) if single_file else df
-        writer = out.write.mode("overwrite")
-        if fmt == "json":
-            writer.json(f"{output_dir}/{name}")
-        elif fmt == "csv":
-            writer.option("header", True).csv(f"{output_dir}/{name}")
-        else:
-            writer.parquet(f"{output_dir}/{name}")
+    docs = X.doc_text(parse_pages(scan_pdfs(spark, input_dir))).cache()
+    try:
+        tables = extract_tables(docs)
+        for name, df in tables.items():
+            out = df.coalesce(1) if single_file else df
+            writer = out.write.mode("overwrite")
+            if fmt == "json":
+                writer.json(f"{output_dir}/{name}")
+            elif fmt == "csv":
+                writer.option("header", True).csv(f"{output_dir}/{name}")
+            else:
+                writer.parquet(f"{output_dir}/{name}")
+    finally:
+        # The cache serves the five sinks only, failed or not; the
+        # returned frames recompute docs from the input when collected.
+        docs.unpersist()
     return tables
 
 

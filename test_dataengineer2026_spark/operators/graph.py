@@ -100,8 +100,12 @@ def triangles_oriented(oriented: DataFrame) -> DataFrame:
     the exact bound the wedge formulation relied on (a 1e9-edge graph
     caps at ~45k longs, a few hundred KB per row). The two attach
     joins are plain equi-joins on the 8-byte node key (AQE skew
-    splitting applies); total shuffled bytes are O(m) adjacency rows +
-    O(m) edges — strictly less than shuffling the wedge set.
+    splitting applies). Shuffled bytes are NOT O(m): the second join
+    shuffles every edge together with its ``nbrs_u``, so it carries
+    sum over u of out_degree(u)^2 longs — O(m*sqrt(m)) in the worst
+    case, the same order as the wedge set's sum of C(out_degree, 2)
+    rows. What the intersection saves is rows and per-row join work
+    (one row per edge instead of one per wedge), not shuffle volume.
     """
     adj = oriented.groupBy("src").agg(
         F.sort_array(F.collect_list("dst")).alias("nbrs")

@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from test_dataengineer2026_spark.pbcompat import export_pythonpath
+from test_dataengineer2026_spark.pbcompat import daemon, export_pythonpath
 
 #: Directory holding the package: Python workers import the package from
 #: here when a UDF is unpickled, whatever the driver's working directory.
@@ -106,6 +106,16 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers fork from pbcompat/daemon.py, which backports
+        # CPython 3.13's lazy zipimporter.invalidate_caches to older
+        # interpreters and then runs pyspark.daemon: a reused worker
+        # calls invalidate_caches at the start of every task, and
+        # before 3.13 that re-reads the pyspark.zip, py4j and
+        # spark-core JAR directories each time. Patching in the daemon,
+        # not a sitecustomize, reaches every forked worker from its
+        # first task and no other interpreter. The workers import the
+        # module from the package root exported below.
+        .config("spark.python.daemon.module", daemon.__name__)
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

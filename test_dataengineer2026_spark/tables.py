@@ -113,10 +113,11 @@ _LAYOUT_CACHE: dict[str, tuple[int, int]] = {}
 
 def _scan_layout(sf_dir: str, name: str) -> tuple[int, int]:
     """(estimated scan splits, total rows) for a base table's physical
-    files, from parquet footers only (no Spark job). A single file
-    estimates max(1, size // maxPartitionBytes) splits — an OVER-estimate
-    for a one-row-group file (one row group = one useful task no matter
-    the byte ranges), which only errs toward NOT widening."""
+    files, from parquet footers only (no Spark job). A file estimates
+    ceil(size / maxPartitionBytes) splits, the byte ranges Spark cuts it
+    into — an OVER-estimate of useful tasks for a file with fewer row
+    groups than ranges (a range holding no row group's midpoint reads
+    nothing), which only errs toward NOT widening."""
     path = table_path(sf_dir, name)
     if path in _LAYOUT_CACHE:
         return _LAYOUT_CACHE[path]
@@ -133,7 +134,7 @@ def _scan_layout(sf_dir: str, name: str) -> tuple[int, int]:
     import pyarrow.parquet as pq
 
     for leaf in leaves:
-        splits += max(1, os.stat(leaf).st_size // _MAX_PARTITION_BYTES)
+        splits += max(1, -(-os.stat(leaf).st_size // _MAX_PARTITION_BYTES))
         rows += pq.ParquetFile(leaf).metadata.num_rows
     out = (max(1, splits), rows)
     _LAYOUT_CACHE[path] = out

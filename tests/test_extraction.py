@@ -22,14 +22,15 @@ pytestmark = pytest.mark.skipif(
 
 @pytest.fixture(scope="module")
 def extracted(spark):
+    from test_dataengineer2026_spark.extraction import extract as X
     from test_dataengineer2026_spark.extraction.pipeline import (
-        extract_all,
+        extract_tables,
         parse_pages,
         scan_pdfs,
     )
 
     pdfs = scan_pdfs(spark, SAMPLE_DIR)
-    return extract_all(parse_pages(pdfs))
+    return extract_tables(X.doc_text(parse_pages(pdfs)).cache())
 
 
 def test_x1_pages_have_text(spark):

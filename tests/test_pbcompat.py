@@ -7,16 +7,21 @@ google.protobuf that must not count as a runtime)."""
 
 from __future__ import annotations
 
+import importlib
 import importlib.machinery
+import importlib.util
 import os
 import subprocess
 import sys
+import zipfile
+import zipimport
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from test_dataengineer2026_spark import pbcompat
+from test_dataengineer2026_spark.pbcompat import daemon
 
 
 def test_ensure_makes_protobuf_importable():
@@ -123,3 +128,117 @@ def test_get_session_workers_import_package_from_any_cwd(tmp_path):
     )
     assert r.returncode == 0, r.stderr[-1500:]
     assert "ROWS " in r.stdout and "ModuleNotFoundError" not in r.stderr
+
+
+@pytest.fixture
+def zipimporter_restored(monkeypatch):
+    """Undo ``daemon.install`` when the test ends: ``zipimporter`` gets
+    its own ``invalidate_caches`` back and loses the ``_files``
+    property. Importers created meanwhile keep a ``_files`` attribute,
+    so the stock code can still use them."""
+    cls = zipimport.zipimporter
+    monkeypatch.setattr(cls, "invalidate_caches", cls.invalidate_caches)
+    if "_files" not in vars(cls):
+        monkeypatch.setattr(cls, "_files", None, raising=False)
+        monkeypatch.delattr(cls, "_files")
+
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(f"{name}.py", src)
+
+
+def test_daemon_backport_imports_module_added_to_rewritten_zip(
+    zipimporter_restored, monkeypatch, tmp_path
+):
+    """After ``invalidate_caches`` the archive's directory is only
+    dropped, not re-read, and the next import reads the new one."""
+    archive = str(tmp_path / "lib.zip")
+    _write_zip(archive, {"pbc_zip_first": "X = 1"})
+    monkeypatch.syspath_prepend(archive)
+    daemon.install()
+    try:
+        assert importlib.import_module("pbc_zip_first").X == 1
+        _write_zip(archive, {"pbc_zip_first": "X = 1", "pbc_zip_added": "X = 2"})
+        importlib.invalidate_caches()
+        assert archive not in zipimport._zip_directory_cache
+        assert importlib.import_module("pbc_zip_added").X == 2
+        assert archive in zipimport._zip_directory_cache
+    finally:
+        sys.modules.pop("pbc_zip_first", None)
+        sys.modules.pop("pbc_zip_added", None)
+
+
+def test_daemon_backport_deleted_archive_finds_nothing(
+    zipimporter_restored, monkeypatch, tmp_path
+):
+    archive = tmp_path / "gone.zip"
+    _write_zip(archive, {"pbc_zip_gone": "X = 1"})
+    monkeypatch.syspath_prepend(str(archive))
+    daemon.install()
+    assert importlib.util.find_spec("pbc_zip_gone") is not None
+    importer = sys.path_importer_cache[str(archive)]
+    assert isinstance(importer, zipimport.zipimporter)
+    archive.unlink()
+    importlib.invalidate_caches()
+    assert importer.find_spec("pbc_zip_gone") is None
+    assert importlib.util.find_spec("pbc_zip_gone") is None
+
+
+def test_daemon_backport_install_twice_is_harmless(
+    zipimporter_restored, monkeypatch, tmp_path
+):
+    daemon.install()
+    before = dict(vars(zipimport.zipimporter))
+    daemon.install()
+    assert dict(vars(zipimport.zipimporter)) == before
+    archive = str(tmp_path / "twice.zip")
+    _write_zip(archive, {"pbc_zip_twice": "X = 3"})
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("pbc_zip_twice").X == 3
+    finally:
+        sys.modules.pop("pbc_zip_twice", None)
+
+
+def test_daemon_backport_leaves_python_313_alone(zipimporter_restored, monkeypatch):
+    before = dict(vars(zipimport.zipimporter))
+    monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
+    daemon.install()
+    assert dict(vars(zipimport.zipimporter)) == before
+
+
+def test_get_session_workers_invalidate_zip_caches_lazily(tmp_path):
+    """Through ``get_session``'s worker daemon, a task's
+    ``importlib.invalidate_caches()`` drops the ``pyspark.zip``
+    directory instead of re-reading it, as Python 3.13 does. With the
+    stock daemon on an older Python the call refills the cache at
+    once."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    code = (
+        "import sys; sys.path.insert(0, sys.argv[1]);"
+        "from test_dataengineer2026_spark.session import get_session\n"
+        "def probe(_):\n"
+        "    import importlib, sys, zipimport\n"
+        "    zips = [p for p in sys.path if p.endswith('pyspark.zip')]\n"
+        "    importlib.invalidate_caches()\n"
+        "    yield zips, [z for z in zips if z in zipimport._zip_directory_cache]\n"
+        "spark = get_session('zip-probe', shuffle_partitions=2)\n"
+        "for zips, cached in spark.sparkContext.parallelize(range(2), 2)"
+        ".mapPartitions(probe).collect():\n"
+        "    print('ZIPS', len(zips), 'CACHED', len(cached))"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", code, root],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-1500:]
+    lines = [ln for ln in r.stdout.splitlines() if ln.startswith("ZIPS")]
+    assert lines == ["ZIPS 1 CACHED 0"] * 2, r.stdout[-1500:]

@@ -69,6 +69,25 @@ def test_clear_cache_resets_table_rows_after_regeneration(spark, tmp_path):
     assert tables.table_rows(str(tmp_path), "region") == 7
 
 
+def test_scan_layout_counts_partial_split(monkeypatch, tmp_path):
+    """A file a little over maxPartitionBytes is cut into two byte
+    ranges, so it estimates two splits, not one; a file within one
+    range estimates one."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf_dir = str(tmp_path)
+    path = tables.table_path(sf_dir, "region")
+    pq.write_table(pa.table({"r_regionkey": list(range(100))}), path)
+    size = os.stat(path).st_size
+    for max_bytes, splits in ((size - 1, 2), (-(-size // 3), 3), (size, 1), (size * 2, 1)):
+        monkeypatch.setattr(tables, "_MAX_PARTITION_BYTES", max_bytes)
+        monkeypatch.setattr(tables, "_LAYOUT_CACHE", {})
+        assert tables._scan_layout(sf_dir, "region") == (splits, 100), max_bytes
+
+
 def test_duck_view_sql_layouts(tmp_path):
     """r12 advisor pin for the now-shared layout detector: (1) a flat
     part FILE whose name contains '=' must NOT trigger hive
