@@ -23,6 +23,10 @@ not a ``sitecustomize``: the one hook all workers honour is the
 protobuf shim's directory on ``PYTHONPATH``, and putting that there
 for every session would load the shim into every worker and every
 other interpreter the session starts.
+
+For the same reason the daemon imports pandas and pyarrow before it
+forks: each worker inherits them instead of importing them on its
+first Arrow task.
 """
 
 from __future__ import annotations
@@ -73,4 +77,9 @@ def install() -> None:
 
 if __name__ == "__main__":
     install()
+    # ``pyspark.worker`` and its Arrow serializers import these only
+    # when a task first needs them: about 0.5 s of CPU per worker.
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+
     runpy.run_module("pyspark.daemon", run_name="__main__", alter_sys=True)

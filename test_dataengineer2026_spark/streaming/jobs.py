@@ -80,12 +80,27 @@ def _source_fingerprint(sf_dir: str) -> str:
     return f"{st.st_mtime_ns}:{st.st_size}"
 
 
+def _stage_marker(done_marker: str, sf_dir: str) -> str:
+    """What a stage's ``_STAGED``/``_DONE`` marker holds: the stage's own
+    absolute directory and the source fingerprint. The directory is
+    there because a stage may hold absolute paths into itself (the
+    resume stage's file-sink log does): a checkout moved together with
+    its ``.tmp/`` keeps the fingerprint, but its stages must restage."""
+    stage = os.path.dirname(os.path.abspath(done_marker))
+    return f"{stage}\n{_source_fingerprint(sf_dir)}"
+
+
 def _stage_is_current(done_marker: str, sf_dir: str) -> bool:
     try:
         with open(done_marker) as f:
-            return f.read() == _source_fingerprint(sf_dir)
+            return f.read() == _stage_marker(done_marker, sf_dir)
     except OSError:
         return False
+
+
+def _mark_stage_done(done_marker: str, sf_dir: str) -> None:
+    with open(done_marker, "w") as f:
+        f.write(_stage_marker(done_marker, sf_dir))
 
 
 def stage_events_dir(sf_dir: str) -> str:
@@ -189,8 +204,7 @@ def stage_events_multifile(spark: SparkSession, sf_dir: str) -> str:
         shutil.move(os.path.join(tmp, src), dst)
         shutil.rmtree(tmp)
         os.utime(dst, (base + i * 100, base + i * 100))
-    with open(done, "w") as f:
-        f.write(_source_fingerprint(sf_dir))
+    _mark_stage_done(done, sf_dir)
     return d
 
 
@@ -240,8 +254,7 @@ def stage_events_late_feed(spark: SparkSession, sf_dir: str) -> str:
         shutil.move(os.path.join(tmp, src), dst)
         shutil.rmtree(tmp)
         os.utime(dst, (base + i * 100, base + i * 100))
-    with open(done, "w") as f:
-        f.write(_source_fingerprint(sf_dir))
+    _mark_stage_done(done, sf_dir)
     return d
 
 
@@ -587,8 +600,7 @@ def stage_events_dup_feed(spark: SparkSession, sf_dir: str) -> str:
         shutil.move(os.path.join(tmp, src), dst)
         shutil.rmtree(tmp)
         os.utime(dst, (base + i * 100, base + i * 100))
-    with open(done, "w") as f:
-        f.write(_source_fingerprint(sf_dir))
+    _mark_stage_done(done, sf_dir)
     return d
 
 
@@ -641,5 +653,4 @@ def land_pending_file(layout: dict[str, str]) -> None:
 
 
 def mark_resume_done(layout: dict[str, str], sf_dir: str) -> None:
-    with open(layout["done"], "w") as f:
-        f.write(_source_fingerprint(sf_dir))
+    _mark_stage_done(layout["done"], sf_dir)

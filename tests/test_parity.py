@@ -49,25 +49,27 @@ def test_query_parity(spark, duck, name):
     assert_parity(df, duck, spec.oracle)
 
 
-def test_registry_nonvacuous():
-    """Every oracle-checked query must return > 0 rows at the driver's
-    scale (sf0.01) — an empty result hash-matches an empty oracle and
-    proves nothing (round-9 judge: F2/J6 were green on empty-vs-empty
-    since round 1). DuckDB-only: the driver separately proves
-    spark == oracle, so oracle_rows > 0 implies spark_rows > 0 on any
-    green row. No whitelist — there are no intentional-empty exhibits;
-    add one here explicitly if that ever changes."""
-    con = _duck_mid()
+def _oracle_sweep(sf_dir) -> dict[str, tuple[int, list]]:
+    """name -> (row count, per-column distinct counts) of every oracle
+    result on views at ``sf_dir``: one query per oracle, shared by the
+    nonvacuous and informative guards at that scale."""
+    con = _duck_at(sf_dir)
     try:
-        vacuous = []
+        sweep = {}
         for name, spec in sorted(SPECS.items()):
             if spec.oracle is None:
                 continue
             body = spec.oracle.rstrip().rstrip(";")
-            n = con.execute(f"SELECT COUNT(*) FROM ({body}) _q").fetchone()[0]
-            if n == 0:
-                vacuous.append(name)
-        assert not vacuous, f"vacuous oracle evidence (0 rows at sf0.01): {vacuous}"
+            cols = [
+                d[0]
+                for d in con.execute(f"SELECT * FROM ({body}) _q LIMIT 0").description
+            ]
+            exprs = ", ".join(
+                ["COUNT(*)"] + [f'COUNT(DISTINCT "{c}")' for c in cols]
+            )
+            n, *distinct = con.execute(f"SELECT {exprs} FROM ({body}) _q").fetchone()
+            sweep[name] = (n, distinct)
+        return sweep
     finally:
         con.close()
 
@@ -84,7 +86,45 @@ def _sf_big_or_skip() -> str:
     return sf_big
 
 
-def test_registry_nonvacuous_at_sf0_1():
+@pytest.fixture(scope="module")
+def sweep_mid():
+    """The oracle sweep at the driver's grading scale (sf0.01)."""
+    return _oracle_sweep(SF_DIR_MID)
+
+
+@pytest.fixture(scope="module")
+def sweep_sf0_1():
+    """The oracle sweep at sf0.1, or a skip when that scale is absent."""
+    return _oracle_sweep(_sf_big_or_skip())
+
+
+def _vacuous(sweep) -> list:
+    return [name for name, (n, _) in sweep.items() if n == 0]
+
+
+def _uninformative(sweep) -> list:
+    """Names whose multi-row oracle result has NO column with more than
+    one distinct value in the sweep."""
+    return [
+        (name, n)
+        for name, (n, distinct) in sweep.items()
+        if n > 1 and not any(v and v > 1 for v in distinct)
+    ]
+
+
+def test_registry_nonvacuous(sweep_mid):
+    """Every oracle-checked query must return > 0 rows at the driver's
+    scale (sf0.01) — an empty result hash-matches an empty oracle and
+    proves nothing (round-9 judge: F2/J6 were green on empty-vs-empty
+    since round 1). DuckDB-only: the driver separately proves
+    spark == oracle, so oracle_rows > 0 implies spark_rows > 0 on any
+    green row. No whitelist — there are no intentional-empty exhibits;
+    add one here explicitly if that ever changes."""
+    vacuous = _vacuous(sweep_mid)
+    assert not vacuous, f"vacuous oracle evidence (0 rows at sf0.01): {vacuous}"
+
+
+def test_registry_nonvacuous_at_sf0_1(sweep_sf0_1):
     """Same guard one scale up: every oracle must also return > 0 rows
     at sf0.1, the full-registry replay scale. The r11 judge found the
     class this catches: SQL24's fixed Q11 fraction gave 248 rows at
@@ -94,45 +134,11 @@ def test_registry_nonvacuous_at_sf0_1():
     scale-vacuous class is mechanically unrepresentable at BOTH grading
     scales. Env override SPARK_GRAFT_TEST_SF_DIR_BIG matches the replay
     tooling's layout flexibility."""
-    con = _duck_at(_sf_big_or_skip())
-    try:
-        vacuous = []
-        for name, spec in sorted(SPECS.items()):
-            if spec.oracle is None:
-                continue
-            body = spec.oracle.rstrip().rstrip(";")
-            n = con.execute(f"SELECT COUNT(*) FROM ({body}) _q").fetchone()[0]
-            if n == 0:
-                vacuous.append(name)
-        assert not vacuous, f"vacuous oracle evidence (0 rows at sf0.1): {vacuous}"
-    finally:
-        con.close()
+    vacuous = _vacuous(sweep_sf0_1)
+    assert not vacuous, f"vacuous oracle evidence (0 rows at sf0.1): {vacuous}"
 
 
-def _sweep_uninformative(con) -> list:
-    """Names whose multi-row oracle result has NO column with more than
-    one distinct value on the connection's views — shared body for the
-    per-scale informative guards below."""
-    uninformative = []
-    for name, spec in sorted(SPECS.items()):
-        if spec.oracle is None:
-            continue
-        body = spec.oracle.rstrip().rstrip(";")
-        cols = [
-            d[0]
-            for d in con.execute(f"SELECT * FROM ({body}) _q LIMIT 0").description
-        ]
-        n = con.execute(f"SELECT COUNT(*) FROM ({body}) _q").fetchone()[0]
-        if n <= 1:
-            continue
-        exprs = ", ".join(f'COUNT(DISTINCT "{c}") AS "{c}"' for c in cols)
-        row = con.execute(f"SELECT {exprs} FROM ({body}) _q").fetchone()
-        if not any(v and v > 1 for v in row):
-            uninformative.append((name, n))
-    return uninformative
-
-
-def test_registry_informative():
+def test_registry_informative(sweep_mid):
     """Every multi-row oracle result must have >= 1 column with more than
     one distinct value at sf0.01 — the next weakness class below
     vacuity: a result whose every column is constant hash-matches on row
@@ -143,33 +149,26 @@ def test_registry_informative():
     still proves real values). Single-row results are exempt: their
     hash pins exact values by construction. No whitelist; add one
     explicitly if an intentionally-constant exhibit ever appears."""
-    con = _duck_mid()
-    try:
-        uninformative = _sweep_uninformative(con)
-        assert not uninformative, (
-            f"constant-only oracle evidence (no varying column at sf0.01): "
-            f"{uninformative}"
-        )
-    finally:
-        con.close()
+    uninformative = _uninformative(sweep_mid)
+    assert not uninformative, (
+        f"constant-only oracle evidence (no varying column at sf0.01): "
+        f"{uninformative}"
+    )
 
 
-def test_registry_informative_at_sf0_1():
+def test_registry_informative_at_sf0_1(sweep_sf0_1):
     """The informative guard one scale up, symmetric with the r12
     nonvacuous sf0.1 extension: a result can keep varying columns at
     sf0.01 yet collapse to constants at sf0.1 (the same growth
     mechanics that emptied SQL24 can flatten a survivor column), and
     the sf0.1 replay layer would then prove row counts but no values
-    for that query. DuckDB-only, ~40 s."""
-    con = _duck_at(_sf_big_or_skip())
-    try:
-        uninformative = _sweep_uninformative(con)
-        assert not uninformative, (
-            f"constant-only oracle evidence (no varying column at sf0.1): "
-            f"{uninformative}"
-        )
-    finally:
-        con.close()
+    for that query. DuckDB-only; shares the sf0.1 sweep with the
+    nonvacuous guard."""
+    uninformative = _uninformative(sweep_sf0_1)
+    assert not uninformative, (
+        f"constant-only oracle evidence (no varying column at sf0.1): "
+        f"{uninformative}"
+    )
 
 
 def test_registry_round_overflow_safe():

@@ -10,6 +10,7 @@ from __future__ import annotations
 import importlib
 import importlib.machinery
 import importlib.util
+import json
 import os
 import subprocess
 import sys
@@ -242,3 +243,61 @@ def test_get_session_workers_invalidate_zip_caches_lazily(tmp_path):
     assert r.returncode == 0, r.stderr[-1500:]
     lines = [ln for ln in r.stdout.splitlines() if ln.startswith("ZIPS")]
     assert lines == ["ZIPS 1 CACHED 0"] * 2, r.stdout[-1500:]
+
+
+def test_get_session_starts_jvm_with_compile_policy_and_warm_workers(tmp_path):
+    """``get_session`` launches the driver JVM with its C2 compile
+    policy ahead of the caller's own ``extraJavaOptions``, which still
+    reach the JVM and override a policy flag they repeat, and its
+    Python workers fork with pyarrow already imported. One JVM for all
+    three, started outside the checkout with no inherited PYTHONPATH."""
+    from test_dataengineer2026_spark.session import C2_COMPILE_POLICY
+
+    policy = dict(f.removeprefix("-XX:").split("=") for f in C2_COMPILE_POLICY)
+    caller = [f"-Djava.io.tmpdir={tmp_path}", "-XX:Tier4BackEdgeThreshold=123456"]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    code = (
+        "import json, sys; sys.path.insert(0, sys.argv[1]);"
+        "from test_dataengineer2026_spark.session import get_session\n"
+        "def probe(_):\n"
+        "    import sys\n"
+        "    yield 'pyarrow' in sys.modules\n"
+        "spark = get_session('jvm-probe', shuffle_partitions=2,"
+        " extra_conf={'spark.driver.extraJavaOptions': sys.argv[2]})\n"
+        "jvm = spark._jvm\n"
+        "mx = jvm.java.lang.management.ManagementFactory\n"
+        "hs = mx.getPlatformMXBean(jvm.java.lang.Class.forName("
+        "'com.sun.management.HotSpotDiagnosticMXBean'))\n"
+        "print('PROBE', json.dumps({\n"
+        "    'vm': {k: hs.getVMOption(k).getValue() for k in"
+        " ('Tier4InvocationThreshold', 'Tier4BackEdgeThreshold')},\n"
+        "    'tmpdir': jvm.java.lang.System.getProperty('java.io.tmpdir'),\n"
+        "    'args': list(mx.getRuntimeMXBean().getInputArguments()),\n"
+        "    'pyarrow': spark.sparkContext.parallelize(range(2), 2)"
+        ".mapPartitions(probe).collect(),\n"
+        "}))"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", code, root, " ".join(caller)],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-1500:]
+    lines = [ln for ln in r.stdout.splitlines() if ln.startswith("PROBE ")]
+    assert len(lines) == 1, r.stdout[-1500:]
+    out = json.loads(lines[0].removeprefix("PROBE "))
+    assert out["vm"]["Tier4InvocationThreshold"] == policy["Tier4InvocationThreshold"]
+    # The caller's flags reach the JVM after the policy's, so the one
+    # they repeat takes the caller's value.
+    ours = [a for a in out["args"] if a in C2_COMPILE_POLICY or a in caller]
+    assert (ours, out["vm"]["Tier4BackEdgeThreshold"], out["tmpdir"]) == (
+        [*C2_COMPILE_POLICY, *caller],
+        "123456",
+        str(tmp_path),
+    ), out["args"]
+    assert out["pyarrow"] == [True, True]

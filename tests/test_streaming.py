@@ -2370,3 +2370,20 @@ def test_state_partition_policy_checkpoint_restore(spark, tmp_path):
         if d.isdigit()
     ]
     assert len(state_dirs) == born_with, (state_dirs, born_with)
+
+
+def test_stage_marker_is_stale_in_a_relocated_checkout(tmp_path):
+    """A stage copied to another root along with its marker (a checkout
+    moved with its ``.tmp/``) must restage there: the resume stage's
+    file-sink log holds absolute paths into the old root, so matching
+    the source fingerprint alone is not enough."""
+    from test_dataengineer2026_spark.streaming import jobs
+    from tests.conftest import SF_DIR
+
+    first = tmp_path / "first" / "sf_resume"
+    first.mkdir(parents=True)
+    jobs._mark_stage_done(str(first / "_DONE"), SF_DIR)
+    second = tmp_path / "second" / "sf_resume"
+    shutil.copytree(first, second)
+    assert jobs._stage_is_current(str(first / "_DONE"), SF_DIR)
+    assert not jobs._stage_is_current(str(second / "_DONE"), SF_DIR)
