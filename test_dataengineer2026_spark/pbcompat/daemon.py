@@ -77,8 +77,6 @@ def install() -> None:
 
 if __name__ == "__main__":
     install()
-    # ``pyspark.worker`` and its Arrow serializers import these only
-    # when a task first needs them: about 0.5 s of CPU per worker.
     import pandas  # noqa: F401
     import pyarrow  # noqa: F401
 

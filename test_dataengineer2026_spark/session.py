@@ -58,22 +58,40 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 #: The driver JVM's C2 (tier-4) compile policy: 10x the JDK 17 tier-4
 #: thresholds, C1 (tier 3) left at its defaults. With the stock
 #: thresholds C2 compiles Catalyst, Janino and task code that a job runs
-#: only a few thousand times: 16-25 s of C2-thread CPU in the first pass
-#: of either benchmark workload (4 cores, local[2]), against a 5-9 s
-#: warm pass. With this policy it spends 6 s there, and warm passes get
-#: no dearer: code that stays hot still reaches C2, only later. C1
-#: alone (TieredStopAtLevel=1) saves more on the first pass but about
-#: doubles warm task CPU. Passed as ``spark.driver.defaultJavaOptions``,
-#: which Spark puts before ``spark.driver.extraJavaOptions``, so a
-#: caller's own ``-XX:`` flag there overrides the one here. It reaches
-#: only a JVM that ``get_session`` launches; in local mode that JVM also
-#: runs the tasks.
+#: only a few thousand times, and that compile CPU is most of what makes
+#: a first pass dearer than a warm one. C1 alone (TieredStopAtLevel=1)
+#: would save more on the first pass but makes warm task code slower.
+#: ``compile_policy`` decides which sessions get it.
 C2_COMPILE_POLICY = (
     "-XX:Tier4InvocationThreshold=50000",
     "-XX:Tier4MinInvocationThreshold=6000",
     "-XX:Tier4CompileThreshold=150000",
     "-XX:Tier4BackEdgeThreshold=400000",
 )
+
+
+def compile_policy(slots: int, cores: int) -> tuple[str, ...]:
+    """The driver JVM's compile flags for ``slots`` task slots on a host
+    with ``cores`` cores: ``C2_COMPILE_POLICY`` when the tasks use at
+    most half the cores, none otherwise.
+
+    That is the only place the policy was measured to help: the
+    benchmark's repeated passes on half the cores spent far less compile
+    CPU and their warm passes read no dearer. With a task slot per core,
+    as ``bench.py``, the registry profile and the test suite run, the
+    registry's build and execution times read slower with it in two of
+    three interleaved pairs. Whether that holds, and whether it is the
+    core count or the one-shot queries, is unresolved, so those sessions
+    keep the stock thresholds.
+    """
+    return C2_COMPILE_POLICY if 2 * slots <= cores else ()
+
+
+def host_cores() -> int:
+    """Cores this process may run on: its CPU affinity, where the OS has one."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
 
 
 def default_parallelism() -> int:
@@ -136,8 +154,14 @@ def get_session(
         # first task and no other interpreter. The workers import the
         # module from the package root exported below.
         .config("spark.python.daemon.module", daemon.__name__)
-        .config("spark.driver.defaultJavaOptions", " ".join(C2_COMPILE_POLICY))
     )
+    # Spark puts defaultJavaOptions before a caller's extraJavaOptions on
+    # the JVM's command line, so a flag the caller repeats wins. It
+    # reaches only a JVM this call launches; in local mode that JVM also
+    # runs the tasks.
+    policy = compile_policy(default_parallelism(), host_cores())
+    if policy:
+        builder = builder.config("spark.driver.defaultJavaOptions", " ".join(policy))
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():

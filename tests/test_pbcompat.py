@@ -245,19 +245,30 @@ def test_get_session_workers_invalidate_zip_caches_lazily(tmp_path):
     assert lines == ["ZIPS 1 CACHED 0"] * 2, r.stdout[-1500:]
 
 
-def test_get_session_starts_jvm_with_compile_policy_and_warm_workers(tmp_path):
-    """``get_session`` launches the driver JVM with its C2 compile
-    policy ahead of the caller's own ``extraJavaOptions``, which still
-    reach the JVM and override a policy flag they repeat, and its
-    Python workers fork with pyarrow already imported. One JVM for all
-    three, started outside the checkout with no inherited PYTHONPATH."""
-    from test_dataengineer2026_spark.session import C2_COMPILE_POLICY
+def test_compile_policy_only_when_tasks_leave_half_the_cores():
+    from test_dataengineer2026_spark.session import C2_COMPILE_POLICY, compile_policy
 
+    assert compile_policy(2, 4) == compile_policy(1, 3) == C2_COMPILE_POLICY
+    assert compile_policy(4, 4) == compile_policy(3, 4) == compile_policy(1, 1) == ()
+
+
+def test_get_session_starts_jvm_with_compile_policy_and_warm_workers(tmp_path):
+    """``get_session`` launches the driver JVM of a session on half the
+    cores with its C2 compile policy ahead of the caller's own
+    ``extraJavaOptions``, which still reach the JVM and override a
+    policy flag they repeat, and its Python workers fork with pyarrow
+    already imported. One JVM for all three, started outside the
+    checkout with no inherited PYTHONPATH."""
+    from test_dataengineer2026_spark.session import C2_COMPILE_POLICY, host_cores
+
+    if host_cores() < 2:
+        pytest.skip("one core: no session runs on half of them")
     policy = dict(f.removeprefix("-XX:").split("=") for f in C2_COMPILE_POLICY)
     caller = [f"-Djava.io.tmpdir={tmp_path}", "-XX:Tier4BackEdgeThreshold=123456"]
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    env["SPARK_GRAFT_CPUS"] = "1"
     code = (
         "import json, sys; sys.path.insert(0, sys.argv[1]);"
         "from test_dataengineer2026_spark.session import get_session\n"
