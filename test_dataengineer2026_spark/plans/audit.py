@@ -1,31 +1,38 @@
-"""Physical-plan audit helpers (SURVEY.md §4.2's "engine-side
-obligations", made checkable).
+"""Physical-plan audit (SURVEY.md §4.2's "engine-side obligations",
+made checkable).
 
 The 100 TB design contract is mostly about what the PLAN looks like,
 not what the local run returns: filters must reach the parquet scan
 (PushedFilters), projections must prune the read schema (ReadSchema),
 small dims must broadcast, hot paths must stay inside whole-stage
 codegen, and no operator may introduce an Exchange the query doesn't
-need. The string helpers extract those facts from ``df.explain`` output
-so tests can pin them — a regression that silently turns a broadcast
-join into a 100 TB shuffle now fails CI, not the cluster bill.
+need. ``audit`` reads those facts off the plan's operators so tests can
+pin them — a regression that silently turns a broadcast join into a
+100 TB shuffle now fails CI, not the cluster bill.
 
 ``plan_nodes`` walks the physical plan itself rather than its text:
 every operator of ``df``'s own QueryExecution, through the AQE wrapper,
-query stages and subqueries. After ``execute(df)`` the nodes carry their
-runtime metrics; ``operator_tree`` turns them into the JSON tree that
-``scripts/query_profile.py`` records. Text mode truncates long scan locations and
-filter lists; the walk reads the JVM objects, so it does not.
+query stages and subqueries. ``audit`` and ``file_scans`` read that
+walk; after ``execute(df)`` the nodes also carry their runtime metrics,
+and ``operator_tree`` turns them into the JSON tree that
+``scripts/query_profile.py`` records. Simple-mode explain text cuts
+scan metadata (ReadSchema, filter lists) at
+``spark.sql.maxMetadataStringLength``; the JVM objects do not.
+``plan_string`` stays for checks on operator names and logical plans.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
-import re
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+
+#: Physical join operators, by node name.
+_JOINS = {"BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+          "BroadcastNestedLoopJoin", "CartesianProduct"}
+_SCAN_KEYS = ("ReadSchema", "PushedFilters", "PartitionFilters", "DataFilters")
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:
@@ -36,56 +43,48 @@ def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
-def scan_read_schemas(plan: str) -> list[str]:
-    """ReadSchema clause of every file scan in the plan."""
-    return re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
+def _scan(node) -> dict[str, str]:
+    meta = node.metadata()
+    return {k: meta.apply(k) for k in _SCAN_KEYS}
 
 
-def pushed_filters(plan: str) -> list[str]:
-    """PushedFilters clause of every file scan (empty list = no scan
-    carries pushed predicates)."""
-    return [m for m in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if m.strip()]
-
-
-def exchange_count(plan: str) -> int:
-    """Number of shuffle Exchange operators in the (initial) simple-mode
-    plan (pass ``plan_string(df, "simple")``).
-
-    AQE may later coalesce partitions or convert joins, but every
-    planned Exchange is data crossing the cluster at scale — count them
-    against the minimum the query semantically needs. Broadcast and
-    single-partition (collect-side) exchanges are excluded.
-    """
-    return len(re.findall(r"Exchange hashpartitioning", plan)) + len(
-        re.findall(r"Exchange rangepartitioning", plan)
-    )
-
-
-def join_kinds(plan: str) -> list[str]:
-    """Physical join operators in plan order."""
-    return re.findall(
-        r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
-        r"BroadcastNestedLoopJoin|CartesianProduct)",
-        plan,
-    )
-
-
-def has_wholestage_codegen(plan: str) -> bool:
-    """True if any stage runs fused codegen. Simple mode marks fused
-    operators with ``*(n)``; formatted mode with ``[codegen id : n]``."""
-    return bool(re.search(r"\*\(\d+\)|\[codegen id : \d+\]", plan))
+def file_scans(df: DataFrame) -> list[dict[str, str]]:
+    """ReadSchema, PushedFilters, PartitionFilters and DataFilters of
+    every file scan (``FileSourceScanExec``) in walk order, untruncated.
+    Filter lists keep their brackets: ``"[]"`` is an empty list."""
+    nodes = plan_nodes(df)
+    return [_scan(n) for n in nodes if n.getClass().getSimpleName() == "FileSourceScanExec"]
 
 
 def audit(df: DataFrame) -> dict:
-    """One-call summary used by the audit script and tests."""
-    formatted = plan_string(df, "formatted")
-    simple = plan_string(df, "simple")
+    """The plan facts the contract tests pin, read from ``plan_nodes``
+    without running ``df`` (under AQE: the initial plan, which has no
+    codegen stages yet). A cached relation is an input; the plan that
+    filled it is not walked.
+
+    - ``exchanges``: shuffles by hash or range partitioning, against
+      the minimum the query semantically needs — AQE may coalesce or
+      convert later, but each is data crossing the cluster at scale.
+      Broadcast and single-partition exchanges are not counted, and a
+      reused exchange counts once, where it first runs.
+    - ``joins``: physical join operators in walk order.
+    - ``pushed_filters``: each scan's non-empty PushedFilters, without
+      brackets; ``read_schemas``: each scan's ReadSchema.
+    - ``wholestage``: whether any stage runs fused codegen.
+    """
+    nodes = [(n, n.getClass().getSimpleName().removesuffix("Exec")) for n in plan_nodes(df)]
+    scans = [_scan(n) for n, kind in nodes if kind == "FileSourceScan"]
     return {
-        "exchanges": exchange_count(simple),
-        "joins": join_kinds(simple),
-        "pushed_filters": pushed_filters(formatted),
-        "read_schemas": scan_read_schemas(formatted),
-        "wholestage": has_wholestage_codegen(simple),
+        "exchanges": sum(
+            kind == "ShuffleExchange"
+            and n.outputPartitioning().getClass().getSimpleName()
+            in ("HashPartitioning", "RangePartitioning")
+            for n, kind in nodes
+        ),
+        "joins": [kind for _, kind in nodes if kind in _JOINS],
+        "pushed_filters": [f[1:-1] for f in (s["PushedFilters"] for s in scans) if f != "[]"],
+        "read_schemas": [s["ReadSchema"] for s in scans],
+        "wholestage": any(kind == "WholeStageCodegen" for _, kind in nodes),
     }
 
 

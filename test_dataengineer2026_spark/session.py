@@ -95,7 +95,8 @@ def host_cores() -> int:
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    """Task slots: ``SPARK_GRAFT_CPUS``, else the cores ``host_cores`` sees."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", host_cores()))
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:

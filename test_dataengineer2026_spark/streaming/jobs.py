@@ -20,8 +20,9 @@ same plan; state stores shard by the groupBy key across executors.
 
 from __future__ import annotations
 
+import contextlib
 import os
-from collections.abc import Callable
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -438,13 +439,60 @@ def stateful_shuffle_partitions(staged: str) -> int:
     return max(1, -(-int(est_state) // STATE_TARGET_BYTES))
 
 
+@contextlib.contextmanager
+def _pinned_confs(
+    stream_df: DataFrame,
+    runner: str,
+    confs: dict[str, str],
+    shuffle_partitions: int | None,
+) -> Iterator[SparkSession]:
+    """Set ``confs`` (and ``spark.sql.shuffle.partitions`` when
+    ``shuffle_partitions`` is given) on the stream's session for one
+    bounded run, and restore each old value (or unset it) on the way
+    out, whether the run succeeds or fails. The confs are session-wide,
+    so a run that would overlap an active stream raises, naming
+    ``runner``, instead of clobbering that stream's confs."""
+    spark = stream_df.sparkSession
+    active = spark.streams.active
+    if active:
+        raise RuntimeError(
+            f"{runner} mutates session-wide streaming confs and must not run "
+            f"concurrently with active streams: {[q.name for q in active]}"
+        )
+    if shuffle_partitions is not None:
+        confs = {**confs, "spark.sql.shuffle.partitions": str(shuffle_partitions)}
+    restore = [(key, spark.conf.get(key, None)) for key in confs]
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield spark
+    finally:
+        for key, old in reversed(restore):
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
+
+
+def _start_to_memory(stream_df: DataFrame, name: str, output_mode: str):
+    """Start ``stream_df`` into the memory sink ``name`` as a bounded
+    availableNow run."""
+    return (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def run_to_memory(
     stream_df: DataFrame,
     name: str,
     output_mode: str,
     final_no_data_batch: bool = True,
     shuffle_partitions: int | None = None,
-) -> Callable[[SparkSession], DataFrame]:
+) -> DataFrame:
     """Run a bounded streaming query into a memory sink and return the
     materialized result table.
 
@@ -463,44 +511,15 @@ def run_to_memory(
     is by key hash, so the result set is partition-count-independent;
     only the per-batch store-machinery cost changes.
 
-    Both confs are session-level; they are set just before start and
-    restored after termination. Bounded availableNow runs are sequential
-    here — checked below so a future concurrent caller fails loudly
-    instead of having its conf silently clobbered mid-stream (r18
-    advisor).
+    Both confs are session-level; ``_pinned_confs`` sets them just
+    before start, restores them after termination, and refuses to run
+    beside an active stream, whose confs it would clobber.
     """
-    spark = stream_df.sparkSession
-    active = spark.streams.active
-    if active:
-        raise RuntimeError(
-            f"run_to_memory mutates session-wide streaming confs and must "
-            f"not run concurrently with active streams: {[q.name for q in active]}"
-        )
-    restore: list[tuple[str, str | None]] = []
-
-    def _set(key: str, value: str) -> None:
-        restore.append((key, spark.conf.get(key, None)))
-        spark.conf.set(key, value)
-
+    confs = {}
     if not final_no_data_batch:
-        _set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    if shuffle_partitions is not None:
-        _set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        for key, old in reversed(restore):
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    with _pinned_confs(stream_df, "run_to_memory", confs, shuffle_partitions) as spark:
+        _start_to_memory(stream_df, name, output_mode).awaitTermination()
     return spark.table(name)
 
 
@@ -529,45 +548,22 @@ def run_to_memory_until(
     stops — the count is captured into the checkpoint at batch 0)."""
     import time
 
-    spark = stream_df.sparkSession
-    active = spark.streams.active
-    if active:
-        raise RuntimeError(
-            f"run_to_memory_until mutates session-wide streaming confs and "
-            f"must not run concurrently with active streams: "
-            f"{[q.name for q in active]}"
-        )
-    conf_key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(conf_key, None)
-    if shuffle_partitions is not None:
-        spark.conf.set(conf_key, str(shuffle_partitions))
-    q = None
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        deadline = time.time() + timeout_s
-        while spark.table(name).count() < expected_rows:
-            if q.awaitTermination(0.5):
-                break  # terminated on its own: sink is final
-            if time.time() > deadline:
-                raise TimeoutError(
-                    f"stream {name!r}: sink stuck at "
-                    f"{spark.table(name).count()}/{expected_rows} rows "
-                    f"after {timeout_s}s"
-                )
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        if shuffle_partitions is not None:
-            if old is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, old)
+    with _pinned_confs(stream_df, "run_to_memory_until", {}, shuffle_partitions) as spark:
+        q = _start_to_memory(stream_df, name, output_mode)
+        try:
+            deadline = time.time() + timeout_s
+            while spark.table(name).count() < expected_rows:
+                if q.awaitTermination(0.5):
+                    break  # terminated on its own: sink is final
+                if time.time() > deadline:
+                    raise TimeoutError(
+                        f"stream {name!r}: sink stuck at "
+                        f"{spark.table(name).count()}/{expected_rows} rows "
+                        f"after {timeout_s}s"
+                    )
+        finally:
+            if q.isActive:
+                q.stop()
     return spark.table(name)
 
 

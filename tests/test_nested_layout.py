@@ -96,24 +96,20 @@ def test_nested_schema_pruning_plan_contract(spark, struct_store):
     TB struct column reads EVERY leaf for any access."""
     from pyspark.sql import functions as F
 
-    from test_dataengineer2026_spark.plans.audit import plan_string
+    from test_dataengineer2026_spark.plans.audit import file_scans
 
     df = (
         spark.read.parquet(struct_store)
         .filter(F.col("order_info.o_totalprice") > 150000.0)
         .select(F.col("order_info.o_orderstatus").alias("status"))
     )
-    plan = plan_string(df, "simple")
-    scan = next(ln for ln in plan.splitlines() if "FileScan" in ln)
-    assert "ReadSchema:" in scan, scan
-    read_schema = scan.split("ReadSchema:")[1]
+    (scan,) = file_scans(df)
+    read_schema = scan["ReadSchema"]
     assert "o_orderstatus" in read_schema and "o_totalprice" in read_schema, scan
     # the pruned leaf: o_orderdate must NOT be decoded
     assert "o_orderdate" not in read_schema, scan
     # nested predicate pushdown: the totalprice filter reaches the scan
-    assert "PushedFilters: [" in scan, scan
-    pushed = scan.split("PushedFilters: [")[1].split("]")[0]
-    assert "o_totalprice" in pushed, scan
+    assert "o_totalprice" in scan["PushedFilters"], scan
     # and the result is actually nonempty (the contract isn't vacuous)
     assert df.count() > 0
 
@@ -644,7 +640,7 @@ def test_depth3_struct_pruning_pushdown(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from test_dataengineer2026_spark import tables
-    from test_dataengineer2026_spark.plans.audit import plan_string
+    from test_dataengineer2026_spark.plans.audit import file_scans
 
     o = tables.load(spark, SF_DIR, "orders")
     out = str(tmp_path / "orders_struct3.parquet")
@@ -670,26 +666,18 @@ def test_depth3_struct_pruning_pushdown(spark, tmp_path):
             F.col("info.mid.deep.o_totalprice").alias("price"),
         )
     )
-    # the depth-3 ReadSchema exceeds the 100-char metadata truncation
-    # default, which would make the o_orderdate-absent assertion vacuous
-    key = "spark.sql.maxMetadataStringLength"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "2000")
-    try:
-        plan = plan_string(df, "simple")
-    finally:
-        spark.conf.set(key, prev)
-    scan = next(ln for ln in plan.splitlines() if "FileScan" in ln)
-    assert "ReadSchema:" in scan, scan
-    read_schema = scan.split("ReadSchema:")[1]
+    # the depth-3 ReadSchema is longer than explain text's 100-char
+    # metadata cut, which would make the o_orderdate-absent assertion
+    # vacuous; the scan node's metadata is whole
+    (scan,) = file_scans(df)
+    read_schema = scan["ReadSchema"]
+    assert read_schema.endswith(">>>>"), scan
     for leaf in ("o_orderstatus", "o_orderpriority", "o_totalprice"):
         assert leaf in read_schema, scan
     # the pruned depth-3 sibling must NOT be decoded
     assert "o_orderdate" not in read_schema, scan
     # depth-3 nested predicate pushdown reaches the scan
-    assert "PushedFilters: [" in scan, scan
-    pushed = scan.split("PushedFilters: [")[1].split("]")[0]
-    assert "o_totalprice" in pushed, scan
+    assert "o_totalprice" in scan["PushedFilters"], scan
     # the contract isn't vacuous
     assert df.count() > 0
 

@@ -312,3 +312,17 @@ def test_get_session_starts_jvm_with_compile_policy_and_warm_workers(tmp_path):
         str(tmp_path),
     ), out["args"]
     assert out["pyarrow"] == [True, True]
+
+
+def test_default_parallelism_falls_back_to_cpu_affinity(monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS`` a session gets a task slot per core
+    it may run on (its CPU affinity), not per core in the machine, so
+    ``compile_policy`` compares slots and cores of the same kind."""
+    from test_dataengineer2026_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "cpu_count", lambda: 8)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1}, raising=False)
+    assert session.host_cores() == session.default_parallelism() == 2
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.default_parallelism() == 3
