@@ -60,6 +60,10 @@ def extract_tables(docs: DataFrame) -> dict[str, DataFrame]:
     }
 
 
+#: Sink formats ``run_corpus`` writes (CLI ``--format``).
+SINK_FORMATS = ("json", "csv", "parquet")
+
+
 def run_corpus(
     spark: SparkSession,
     input_dir: str,
@@ -78,6 +82,8 @@ def run_corpus(
     an explicit opt-in, never the default (r17 verdict #5 — the old
     unconditional coalesce(1) made every corpus run single-threaded at
     the sink)."""
+    if fmt not in SINK_FORMATS:
+        raise ValueError(f"fmt must be one of {SINK_FORMATS}, got {fmt!r}")
     docs = X.doc_text(parse_pages(scan_pdfs(spark, input_dir))).cache()
     try:
         tables = extract_tables(docs)
@@ -105,7 +111,7 @@ if __name__ == "__main__":  # pragma: no cover
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--format", default="json", choices=["json", "csv", "parquet"])
+    ap.add_argument("--format", default="json", choices=SINK_FORMATS)
     ap.add_argument(
         "--single-file",
         action="store_true",

@@ -37,7 +37,7 @@ from test_dataengineer2026_spark.functions.text import (
     tokens,
 )
 from test_dataengineer2026_spark.lineage import release_checkpoint
-from test_dataengineer2026_spark.tables import parallelize
+from test_dataengineer2026_spark.tables import widen_if_narrow
 
 # MinHash parameters: k = bands * rows_per_band signatures.
 MINHASH_BANDS = 4
@@ -183,11 +183,12 @@ def neardup_pairs_minhash(
 ) -> DataFrame:
     """MinHash LSH candidates verified with exact Jaccard >= threshold.
 
-    The input is hash-redistributed first: shingling + k md5 minhashes
-    per document are compute-bound, and a small single-file scan would
-    otherwise pin the whole pipeline to one task.
+    A narrow input is hash-redistributed first (``widen_if_narrow``):
+    shingling + k md5 minhashes per document are compute-bound, and a
+    small single-file scan would otherwise pin the whole pipeline to one
+    task.
     """
-    sets = shingle_sets(parallelize(df, id_col), text_col, id_col, n).cache()
+    sets = shingle_sets(widen_if_narrow(df, id_col), text_col, id_col, n).cache()
     banded = band_table(minhash_signature(sets)).cache()
     cands = lsh_candidate_pairs(banded)
     a = sets.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
@@ -210,7 +211,7 @@ def neardup_pairs_inverted(
     docs (stopword-shingles dominate pair blowup and cannot contribute to
     high-Jaccard pairs when the sets are large).
     """
-    sets = shingle_sets(parallelize(df, id_col), text_col, id_col, n)
+    sets = shingle_sets(widen_if_narrow(df, id_col), text_col, id_col, n)
     posting = sets.select(
         "doc", F.size("sh").alias("set_size"), F.explode("sh").alias("shingle")
     )
@@ -254,7 +255,7 @@ def simhash_table(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> Data
     fingerprints collapse; shingle sets stay discriminative.
     """
     toks = (
-        parallelize(df, id_col)
+        widen_if_narrow(df, id_col)
         .select(F.col(id_col).alias("doc"), tokens(text_col).alias("tok_arr"))
         .select("doc", F.explode(shingles(F.col("tok_arr"), n)).alias("tok"))
         .withColumn("h", hash24(F.col("tok")))

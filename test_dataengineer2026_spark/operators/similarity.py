@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from test_dataengineer2026_spark.functions.vector import cosine, dot, l2_norm, l2sq, srp_sign_bits
-from test_dataengineer2026_spark.tables import parallelize
+from test_dataengineer2026_spark.tables import widen_if_narrow
 
 SRP_TABLES = 4
 SRP_BITS = 6
@@ -284,8 +284,8 @@ def srp_neighbor_pairs(
     """Approximate similar-pair search: SRP bucket collisions verified
     with exact cosine >= threshold.
 
-    The bucket table is hash-redistributed then CACHED before the
-    self-join: the SRP sign bits cost SRP_PLANES x DIM interpreted
+    The bucket table is hash-redistributed when its input's layout is
+    narrow (``widen_if_narrow``), then CACHED before the self-join: the SRP sign bits cost SRP_PLANES x DIM interpreted
     lambda ops per vector, so (a) a small single-file scan would pin
     that compute to one task (same rationale as D2's shingle pass), and
     (b) an uncached table would evaluate the bits once per join side.
@@ -299,7 +299,7 @@ def srp_neighbor_pairs(
     does not accumulate bucket-table blocks in storage memory (pinned
     in tests/test_similarity.py). The checkpoint also cuts the verify
     join's lineage: the SRP pass runs exactly once per call."""
-    b = srp_buckets(parallelize(df, id_col), id_col, vec_col).cache()
+    b = srp_buckets(widen_if_narrow(df, id_col), id_col, vec_col).cache()
     cands = (
         b.alias("a")
         .join(

@@ -56,8 +56,6 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # buy back the exchange).
     li = tables.widen_if_narrow(
         tables.load(spark, sf_dir, "lineitem"),
-        sf_dir,
-        "lineitem",
         key="l_orderkey",
         min_rows_per_split=100_000,
     )

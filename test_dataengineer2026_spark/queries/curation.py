@@ -276,7 +276,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from test_dataengineer2026_spark.functions.text import shingles, tokens
 
     apply_runtime_confs(spark)
-    d = tables.parallelize(tables.load(spark, sf_dir, "documents"), "doc_id")
+    d = tables.widen_if_narrow(tables.load(spark, sf_dir, "documents"), "doc_id")
 
     def posting(df: DataFrame) -> DataFrame:
         # tokenize in its own projection — split() inside the shingle

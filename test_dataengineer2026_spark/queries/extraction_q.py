@@ -190,7 +190,7 @@ def pdf_extract_text_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     both paths are Arrow-batched Pandas UDFs, so 10k PDFs parallelize
     across executors with no driver involvement."""
     apply_runtime_confs(spark)
-    d = tables.parallelize(tables.load(spark, sf_dir, "documents"), "doc_id")
+    d = tables.widen_if_narrow(tables.load(spark, sf_dir, "documents"), "doc_id")
     pdfs = d.select("doc_id", P.render_pdf_udf("text").alias("content"))
     pages = pdfs.select("doc_id", F.explode(P.pages_udf("content")).alias("pg"))
     return pages.select("doc_id", F.col("pg.page").alias("page"), F.col("pg.text").alias("text"))
@@ -481,7 +481,7 @@ def text_layer_check_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     char totals run over the extractor's own output via higher-order
     array functions — no second Python crossing after pages_udf."""
     apply_runtime_confs(spark)
-    d = tables.parallelize(tables.load(spark, sf_dir, "documents"), "doc_id")
+    d = tables.widen_if_narrow(tables.load(spark, sf_dir, "documents"), "doc_id")
     content = F.when(
         F.col("doc_id") % 7 == 0, P.render_scanned_pdf_udf("text")
     ).otherwise(P.render_pdf_udf("text"))

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.lineage import release_checkpoint
-from test_dataengineer2026_spark.tables import parallelize
 from test_dataengineer2026_spark.registry import register
 from test_dataengineer2026_spark.session import apply_runtime_confs
 
@@ -221,7 +220,11 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # enumeration itself from wedge-join+closure-join to per-edge
     # out-neighborhood intersection (operators/graph.py docstring has
     # the algorithm and A/B: 14.1 -> 4.1 s warm, identical counts).
-    tri = triangles_oriented(parallelize(orient_by_degree(pairs, deg), "src"))
+    tri = triangles_oriented(
+        orient_by_degree(pairs, deg).repartition(
+            spark.sparkContext.defaultParallelism, "src"
+        )
+    )
     pernode = (
         tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
         .groupBy("node")

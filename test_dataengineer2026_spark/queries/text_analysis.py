@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.functions.text import tokens
-from test_dataengineer2026_spark.tables import parallelize
 from test_dataengineer2026_spark.registry import register
 from test_dataengineer2026_spark.session import apply_runtime_confs
 
@@ -452,13 +451,13 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint table joins on (fingerprint) to find overlapping docs,
     exactly like the D2/D3 posting-list pattern.
 
-    The scan is hash-redistributed first (tables.parallelize): one md5
+    A narrow scan is hash-redistributed first (tables.widen_if_narrow): one md5
     per character position is the heaviest per-row compute in the text
     family, and a small single-file scan would pin it all to one task —
     the same rationale as D2's shingle pass. r18 measured: 4.6 s on 1
     task -> 0.74 s warm at sf0.1."""
     apply_runtime_confs(spark)
-    d = parallelize(tables.load(spark, sf_dir, "documents"), "doc_id")
+    d = tables.widen_if_narrow(tables.load(spark, sf_dir, "documents"), "doc_id")
     hs = F.expr(
         f"transform(sequence(1, length(text) - {WINNOW_K - 1}), "
         f"i -> cast(conv(substr(md5(substr(text, i, {WINNOW_K})), 1, 6), 16, 10) as int))"

@@ -23,7 +23,6 @@ from pyspark.sql import types as T
 
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.tables import parallelize
 from test_dataengineer2026_spark.session import apply_runtime_confs
 
 
@@ -297,13 +296,16 @@ def cogrouped_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cogroup pins the per-key calls across every core — the cogroup
     # reuses the explicit exchanges, so no extra shuffle is added.
     # r18 measured: 14.3 s / 5 tasks -> 2.7 s / 34 tasks warm at sf0.1.
-    o = parallelize(
-        tables.load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice"),
-        "o_custkey",
+    n = spark.sparkContext.defaultParallelism
+    o = (
+        tables.load(spark, sf_dir, "orders")
+        .select("o_custkey", "o_totalprice")
+        .repartition(n, "o_custkey")
     )
-    e = parallelize(
-        tables.load(spark, sf_dir, "events").select("user_id", "value"),
-        "user_id",
+    e = (
+        tables.load(spark, sf_dir, "events")
+        .select("user_id", "value")
+        .repartition(n, "user_id")
     )
     out = (
         o.groupBy("o_custkey")

@@ -1480,65 +1480,70 @@ def test_v8_cogroup_sides_explicitly_widened(spark):
 
 
 def test_widen_if_narrow_is_layout_adaptive(spark, tmp_path):
-    """widen_if_narrow (r19, guide §2.5/§6): repartition ONLY when the
-    physical layout cannot feed the session's cores AND rows/split is
-    large. Three pins: (a) a single big-row-count file widens (the
-    fixture case A1 hits); (b) the same rows spread across >= cores
+    """widen_if_narrow reads the layout from the frame's input files and
+    repartitions ONLY when they cannot feed the session's task slots
+    AND rows/split reaches the caller's threshold. Pins: (a) a single
+    big-row-count file widens (the fixture case A1 hits), and so does
+    a select/filter over it; (b) the same rows spread across >= slots
     files do NOT widen — at real scale the helper must add ZERO
     exchanges; (c) a narrow layout with too few rows per split does not
-    widen (tiny dims never pay a shuffle)."""
-    import pyspark.sql.functions as F
-
+    widen (tiny dims never pay a shuffle); (d) an in-memory frame has no
+    layout and is returned unchanged; (e) the default threshold widens
+    any narrow layout, even a 10-row file."""
     from test_dataengineer2026_spark import tables as T
 
-    cores = spark.sparkContext.defaultParallelism
+    def widened(df) -> bool:
+        p = df._jdf.queryExecution().optimizedPlan().toString()
+        return "RepartitionByExpression" in p
+
+    slots = spark.sparkContext.defaultParallelism
     rows = spark.range(10_000).select(
         F.col("id").alias("l_orderkey"), (F.col("id") % 7).alias("v")
     )
+    rows.coalesce(1).write.parquet(str(tmp_path / "single"))
+    rows.repartition(slots).write.parquet(str(tmp_path / "multi"))
+    rows.limit(10).coalesce(1).write.parquet(str(tmp_path / "tiny"))
+    single = spark.read.parquet(str(tmp_path / "single"))
+    multi = spark.read.parquet(str(tmp_path / "multi"))
+    assert len(single.inputFiles()) == 1
+    assert len(multi.inputFiles()) >= slots
 
-    # (a) single file, many rows -> widened
-    single = tmp_path / "single" / "lineitem.parquet"
-    rows.coalesce(1).write.parquet(str(tmp_path / "single_tmp"))
-    import os
-    import shutil
-
-    os.makedirs(single.parent, exist_ok=True)
-    part = next(
-        f
-        for f in os.listdir(tmp_path / "single_tmp")
-        if f.endswith(".parquet")
-    )
-    shutil.move(str(tmp_path / "single_tmp" / part), str(single))
-    df = T.widen_if_narrow(
-        spark.read.parquet(str(single)),
-        str(tmp_path / "single"),
-        "lineitem",
-        key="l_orderkey",
-        min_rows_per_split=1_000,
-    )
-    p = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "RepartitionByExpression" in p, p
-
-    # (b) >= cores files -> native width, no added exchange
-    multi = tmp_path / "multi" / "lineitem.parquet"
-    rows.repartition(cores).write.parquet(str(multi))
-    df2 = T.widen_if_narrow(
-        spark.read.parquet(str(multi)),
-        str(tmp_path / "multi"),
-        "lineitem",
-        key="l_orderkey",
-        min_rows_per_split=1_000,
-    )
-    p2 = df2._jdf.queryExecution().optimizedPlan().toString()
-    assert "RepartitionByExpression" not in p2, p2
-
+    # (a) single file, many rows -> widened, also under select/filter
+    assert widened(T.widen_if_narrow(single, "l_orderkey", 1_000))
+    narrowed = single.filter(F.col("v") > 2).select("l_orderkey")
+    assert widened(T.widen_if_narrow(narrowed, "l_orderkey", 1_000))
+    # (b) >= slots files -> native width, no added exchange
+    assert not widened(T.widen_if_narrow(multi, "l_orderkey", 1_000))
+    assert not widened(T.widen_if_narrow(multi, "l_orderkey"))
     # (c) single file, few rows per split -> no widen
-    df3 = T.widen_if_narrow(
-        spark.read.parquet(str(single)),
-        str(tmp_path / "single"),
-        "lineitem",
-        key="l_orderkey",
-        min_rows_per_split=100_000,
-    )
-    p3 = df3._jdf.queryExecution().optimizedPlan().toString()
-    assert "RepartitionByExpression" not in p3, p3
+    assert not widened(T.widen_if_narrow(single, "l_orderkey", 100_000))
+    # (d) in-memory frame -> the same frame back
+    mem = spark.createDataFrame([(1, 2)], "l_orderkey long, v long")
+    assert T.widen_if_narrow(mem, "l_orderkey") is mem
+    # (e) default threshold widens a 10-row single file
+    tiny = spark.read.parquet(str(tmp_path / "tiny"))
+    assert widened(T.widen_if_narrow(tiny, "l_orderkey"))
+
+
+def test_neardup_inverted_widens_only_a_narrow_layout(spark, tmp_path):
+    """The operator takes its scan width from the frame it is given:
+    over a documents table written as >= defaultParallelism files it
+    adds no doc_id repartition (the scan already feeds every slot);
+    over the same table as one file it keeps the widening exchange."""
+    from test_dataengineer2026_spark import tables as T
+    from test_dataengineer2026_spark.operators.dedup import neardup_pairs_inverted
+
+    docs = T.load(spark, SF_DIR_MID, "documents")
+    slots = spark.sparkContext.defaultParallelism
+    for files, widens in ((slots, False), (1, True)):
+        path = str(tmp_path / f"documents_{files}")
+        docs.repartition(files).write.parquet(path)
+        df = spark.read.parquet(path)
+        assert len(df.inputFiles()) == files
+        p = plan_string(neardup_pairs_inverted(df, "text", "doc_id"), "formatted")
+        by_doc = [
+            line
+            for line in p.splitlines()
+            if "REPARTITION_BY_NUM" in line and "doc_id" in line
+        ]
+        assert bool(by_doc) == widens, p

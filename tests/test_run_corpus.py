@@ -1,7 +1,8 @@
 """``run_corpus`` over a few reports rendered with the package's own
 ``render_pdf``: the docs cache it builds for its sinks is released when
 it returns, also when a sink fails, and the frames it returns still
-collect the rows it wrote."""
+collect the rows it wrote. An unknown sink format fails before any
+scan."""
 
 from __future__ import annotations
 
@@ -61,3 +62,10 @@ def test_run_corpus_releases_docs_when_a_sink_fails(spark, corpus_dir, tmp_path)
     with pytest.raises(Exception):
         run_corpus(spark, corpus_dir, str(blocker), fmt="parquet")
     assert _nothing_cached(spark)
+
+
+def test_run_corpus_rejects_unknown_format_before_scanning(spark, corpus_dir, tmp_path):
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="jsonl"):
+        run_corpus(spark, corpus_dir, str(out), fmt="jsonl")
+    assert not out.exists()

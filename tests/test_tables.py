@@ -74,6 +74,7 @@ def test_scan_layout_counts_partial_split(monkeypatch, tmp_path):
     ranges, so it estimates two splits, not one; a file within one
     range estimates one."""
     import os
+    import pathlib
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -82,10 +83,29 @@ def test_scan_layout_counts_partial_split(monkeypatch, tmp_path):
     path = tables.table_path(sf_dir, "region")
     pq.write_table(pa.table({"r_regionkey": list(range(100))}), path)
     size = os.stat(path).st_size
+    uri = pathlib.Path(path).as_uri()
     for max_bytes, splits in ((size - 1, 2), (-(-size // 3), 3), (size, 1), (size * 2, 1)):
         monkeypatch.setattr(tables, "_MAX_PARTITION_BYTES", max_bytes)
         monkeypatch.setattr(tables, "_LAYOUT_CACHE", {})
-        assert tables._scan_layout(sf_dir, "region") == (splits, 100), max_bytes
+        assert tables._scan_layout([uri]) == (splits, 100), max_bytes
+
+
+def test_table_rows_skips_crashed_writer_leftovers(spark, tmp_path):
+    """A crashed writer leaves part files under ``_temporary``, which
+    Spark's reader skips: ``table_rows`` counts only the rows Spark
+    reads, not every parquet file under the table directory."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tables.table_path(str(tmp_path), "region")
+    leftover = os.path.join(path, "_temporary", "0", "task_1")
+    os.makedirs(leftover)
+    pq.write_table(pa.table({"r_regionkey": [0, 1, 2]}), f"{path}/part-0.parquet")
+    pq.write_table(pa.table({"r_regionkey": [3, 4]}), f"{leftover}/part-1.parquet")
+    assert tables.load(spark, str(tmp_path), "region").count() == 3
+    assert tables.table_rows(str(tmp_path), "region") == 3
 
 
 def test_duck_view_sql_layouts(tmp_path):
