@@ -183,10 +183,9 @@ def neardup_pairs_minhash(
 ) -> DataFrame:
     """MinHash LSH candidates verified with exact Jaccard >= threshold.
 
-    A narrow input is hash-redistributed first (``widen_if_narrow``):
-    shingling + k md5 minhashes per document are compute-bound, and a
-    small single-file scan would otherwise pin the whole pipeline to one
-    task.
+    The input is hash-redistributed first: shingling + k md5 minhashes
+    per document are compute-bound, and a small single-file scan would
+    otherwise pin the whole pipeline to one task.
     """
     sets = shingle_sets(widen_if_narrow(df, id_col), text_col, id_col, n).cache()
     banded = band_table(minhash_signature(sets)).cache()

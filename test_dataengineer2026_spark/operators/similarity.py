@@ -284,8 +284,8 @@ def srp_neighbor_pairs(
     """Approximate similar-pair search: SRP bucket collisions verified
     with exact cosine >= threshold.
 
-    The bucket table is hash-redistributed when its input's layout is
-    narrow (``widen_if_narrow``), then CACHED before the self-join: the SRP sign bits cost SRP_PLANES x DIM interpreted
+    The bucket table is hash-redistributed then CACHED before the
+    self-join: the SRP sign bits cost SRP_PLANES x DIM interpreted
     lambda ops per vector, so (a) a small single-file scan would pin
     that compute to one task (same rationale as D2's shingle pass), and
     (b) an uncached table would evaluate the bits once per join side.

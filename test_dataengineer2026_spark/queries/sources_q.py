@@ -626,7 +626,7 @@ def python_datasource_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Sink-side widening was also A/B'd and REJECTED: the repartition
     # exchange + 32 task commits cost 2.7 s vs 0.9 s for the 1-task
     # write — the render is too cheap to farm out at this scale.
-    fpp = max(16, -(-tables.table_rows(sf_dir, "documents")
+    fpp = max(16, -(-tables.table_rows(spark, sf_dir, "documents")
                     // spark.sparkContext.defaultParallelism))
     return (
         spark.read.format("pdfcorpus")
@@ -670,7 +670,7 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-scaled filesPerPartition, same A/B evidence as S18 (see
     # there): per-task Python-datasource overhead dominated at the old
     # constant 16 once the corpus outgrew it.
-    fpp = max(16, -(-tables.table_rows(sf_dir, "documents")
+    fpp = max(16, -(-tables.table_rows(spark, sf_dir, "documents")
                     // spark.sparkContext.defaultParallelism))
     s = (
         spark.readStream.format("pdfcorpus")

@@ -451,7 +451,7 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint table joins on (fingerprint) to find overlapping docs,
     exactly like the D2/D3 posting-list pattern.
 
-    A narrow scan is hash-redistributed first (tables.widen_if_narrow): one md5
+    The scan is hash-redistributed first (tables.widen_if_narrow): one md5
     per character position is the heaviest per-row compute in the text
     family, and a small single-file scan would pin it all to one task —
     the same rationale as D2's shingle pass. r18 measured: 4.6 s on 1

@@ -123,47 +123,48 @@ def _scan_layout(files: list[str]) -> tuple[int, int]:
     return splits, rows
 
 
-def table_rows(sf_dir: str, name: str) -> int:
+def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Total rows in a base table, from parquet footers only (no Spark
-    job; memoized per process). Reads the files the active session's
-    ``load`` scans, so leftovers Spark skips (a crashed writer's
-    ``_temporary`` leaf) are not counted. For sizing decisions — e.g.
-    scaling a custom source's files-per-partition to the corpus."""
-    df = load(SparkSession.active(), sf_dir, name)
-    return _scan_layout(df.inputFiles())[1]
+    job; memoized per process). Reads the files ``load`` scans, so
+    leftovers Spark skips (a crashed writer's ``_temporary`` leaf) are
+    not counted. For sizing decisions — e.g. scaling a custom source's
+    files-per-partition to the corpus."""
+    return _scan_layout(load(spark, sf_dir, name).inputFiles())[1]
 
 
 def widen_if_narrow(
     df: DataFrame, key: str | None = None, min_rows_per_split: int = 0
 ) -> DataFrame:
     """The one scan-widening policy: hash-repartition ``df`` (on ``key``
-    if given) to the session's task slots ONLY when its input files
-    cannot feed them on their own — estimated splits below
-    ``sc.defaultParallelism`` (which ``get_session`` sets to its
-    shuffle-partition count) AND at least ``min_rows_per_split`` rows
-    per split. The layout is read from the frame itself, so operators
-    can call this: at real scale (many files or large files) it is an
-    exact no-op and the scan's native width flows through; a frame with
-    no input files (in memory) is returned unchanged. Fewer files than
-    slots must be parquet: their footers are read.
+    if given) to the session's task slots, ``sc.defaultParallelism``
+    (which ``get_session`` sets to its shuffle-partition count).
 
     ``min_rows_per_split`` is the caller's statement of per-row work.
-    The default 0 widens whenever the layout is narrow: the heavy
-    per-row sites (shingling, md5 per position, PDF rendering) pay for
-    the exchange even on a 300-row file. A rows threshold there was
-    rejected: it would skip the widening at every fixture scale, and D3
-    over a 300-row lake table without its widening used a median 1.36 s
-    of CPU against 1.19 s with it (local[2], 16 interleaved pairs).
-    Plain columnar aggregation (A1) only pays at 100k+ rows per split."""
-    files = df.inputFiles()
+    The default 0 says it pays for the exchange at any layout, so the
+    frame is always widened and no layout is read: the heavy per-row
+    sites (shingling, md5 per position, PDF rendering) take any frame,
+    whatever its format, location or caching. A positive threshold
+    (A1, D10) widens only when the frame's parquet input files cannot
+    feed the slots on their own — estimated splits below the slot
+    count AND at least that many rows per split — so at real scale it
+    is an exact no-op; a frame with no input files (in memory, cached)
+    is returned unchanged.
+
+    The heavy sites keep no layout check. A rows threshold would skip
+    the widening at every fixture scale, and D3 over a 300-row lake
+    table without its widening used a median 1.36 s of CPU against
+    1.19 s with it (local[2], 16 interleaved pairs). A split-count check
+    is unmeasured (no workload has a multi-file documents table), and a
+    skewed part file would still pin the per-row work to one task."""
     slots = df.sparkSession.sparkContext.defaultParallelism
-    # Every file is at least one split, so a many-file layout needs no
-    # footer read.
-    if not files or len(files) >= slots:
-        return df
-    splits, rows = _scan_layout(files)
-    if splits >= slots or rows // splits < min_rows_per_split:
-        return df
+    if min_rows_per_split:
+        files = df.inputFiles()
+        # Every file is at least one split: no footer read needed.
+        if not files or len(files) >= slots:
+            return df
+        splits, rows = _scan_layout(files)
+        if splits >= slots or rows // splits < min_rows_per_split:
+            return df
     return df.repartition(slots, F.col(key)) if key else df.repartition(slots)
 
 

@@ -1480,16 +1480,17 @@ def test_v8_cogroup_sides_explicitly_widened(spark):
 
 
 def test_widen_if_narrow_is_layout_adaptive(spark, tmp_path):
-    """widen_if_narrow reads the layout from the frame's input files and
-    repartitions ONLY when they cannot feed the session's task slots
-    AND rows/split reaches the caller's threshold. Pins: (a) a single
-    big-row-count file widens (the fixture case A1 hits), and so does
-    a select/filter over it; (b) the same rows spread across >= slots
-    files do NOT widen — at real scale the helper must add ZERO
+    """With a rows threshold, widen_if_narrow reads the layout from the
+    frame's input files and repartitions ONLY when they cannot feed the
+    session's task slots AND rows/split reaches the threshold. Pins:
+    (a) a single big-row-count file widens (the fixture case A1 hits),
+    and so does a select/filter over it; (b) the same rows spread across
+    >= slots files do NOT widen — at real scale the helper must add ZERO
     exchanges; (c) a narrow layout with too few rows per split does not
     widen (tiny dims never pay a shuffle); (d) an in-memory frame has no
-    layout and is returned unchanged; (e) the default threshold widens
-    any narrow layout, even a 10-row file."""
+    layout and is returned unchanged; (e) the default threshold 0 always
+    widens, without reading a layout: a 10-row file, the many-file
+    layout and the in-memory frame alike."""
     from test_dataengineer2026_spark import tables as T
 
     def widened(df) -> bool:
@@ -1514,36 +1515,41 @@ def test_widen_if_narrow_is_layout_adaptive(spark, tmp_path):
     assert widened(T.widen_if_narrow(narrowed, "l_orderkey", 1_000))
     # (b) >= slots files -> native width, no added exchange
     assert not widened(T.widen_if_narrow(multi, "l_orderkey", 1_000))
-    assert not widened(T.widen_if_narrow(multi, "l_orderkey"))
     # (c) single file, few rows per split -> no widen
     assert not widened(T.widen_if_narrow(single, "l_orderkey", 100_000))
     # (d) in-memory frame -> the same frame back
     mem = spark.createDataFrame([(1, 2)], "l_orderkey long, v long")
-    assert T.widen_if_narrow(mem, "l_orderkey") is mem
-    # (e) default threshold widens a 10-row single file
+    assert T.widen_if_narrow(mem, "l_orderkey", 1_000) is mem
+    # (e) default threshold widens every frame
     tiny = spark.read.parquet(str(tmp_path / "tiny"))
-    assert widened(T.widen_if_narrow(tiny, "l_orderkey"))
+    for df in (tiny, multi, mem):
+        assert widened(T.widen_if_narrow(df, "l_orderkey"))
 
 
-def test_neardup_inverted_widens_only_a_narrow_layout(spark, tmp_path):
-    """The operator takes its scan width from the frame it is given:
-    over a documents table written as >= defaultParallelism files it
-    adds no doc_id repartition (the scan already feeds every slot);
-    over the same table as one file it keeps the widening exchange."""
+def test_neardup_inverted_widens_any_input(spark, tmp_path):
+    """The operator hash-redistributes whatever frame it is given before
+    shingling: a documents table as one parquet file, as
+    >= defaultParallelism files, or as one JSON file (no parquet footer
+    to read). Each plan carries a doc_id REPARTITION_BY_NUM, and the
+    JSON input finds the same pairs as the parquet one."""
     from test_dataengineer2026_spark import tables as T
     from test_dataengineer2026_spark.operators.dedup import neardup_pairs_inverted
 
-    docs = T.load(spark, SF_DIR_MID, "documents")
+    docs = T.load(spark, SF_DIR_MID, "documents").select("doc_id", "text")
     slots = spark.sparkContext.defaultParallelism
-    for files, widens in ((slots, False), (1, True)):
-        path = str(tmp_path / f"documents_{files}")
-        docs.repartition(files).write.parquet(path)
-        df = spark.read.parquet(path)
+    frames = {}
+    for fmt, files in (("parquet", 1), ("parquet", slots), ("json", 1)):
+        path = str(tmp_path / f"documents_{fmt}_{files}")
+        docs.repartition(files).write.format(fmt).save(path)
+        df = spark.read.schema(docs.schema).format(fmt).load(path)
         assert len(df.inputFiles()) == files
-        p = plan_string(neardup_pairs_inverted(df, "text", "doc_id"), "formatted")
-        by_doc = [
-            line
+        pairs = neardup_pairs_inverted(df, "text", "doc_id")
+        p = plan_string(pairs, "formatted")
+        assert any(
+            "REPARTITION_BY_NUM" in line and "doc_id" in line
             for line in p.splitlines()
-            if "REPARTITION_BY_NUM" in line and "doc_id" in line
-        ]
-        assert bool(by_doc) == widens, p
+        ), p
+        frames[fmt, files] = pairs
+    assert sorted(frames["json", 1].collect()) == sorted(
+        frames["parquet", 1].collect()
+    )

@@ -63,10 +63,10 @@ def test_clear_cache_resets_table_rows_after_regeneration(spark, tmp_path):
 
     path = tables.table_path(str(tmp_path), "region")
     pq.write_table(pa.table({"r_regionkey": [0, 1, 2]}), path)
-    assert tables.table_rows(str(tmp_path), "region") == 3
+    assert tables.table_rows(spark, str(tmp_path), "region") == 3
     pq.write_table(pa.table({"r_regionkey": list(range(7))}), path)
     tables.clear_cache(spark)
-    assert tables.table_rows(str(tmp_path), "region") == 7
+    assert tables.table_rows(spark, str(tmp_path), "region") == 7
 
 
 def test_scan_layout_counts_partial_split(monkeypatch, tmp_path):
@@ -105,7 +105,7 @@ def test_table_rows_skips_crashed_writer_leftovers(spark, tmp_path):
     pq.write_table(pa.table({"r_regionkey": [0, 1, 2]}), f"{path}/part-0.parquet")
     pq.write_table(pa.table({"r_regionkey": [3, 4]}), f"{leftover}/part-1.parquet")
     assert tables.load(spark, str(tmp_path), "region").count() == 3
-    assert tables.table_rows(str(tmp_path), "region") == 3
+    assert tables.table_rows(spark, str(tmp_path), "region") == 3
 
 
 def test_duck_view_sql_layouts(tmp_path):
