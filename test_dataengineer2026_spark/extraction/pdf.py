@@ -380,31 +380,7 @@ def render_table_pdf(cells: list[tuple[int, int, str]]) -> bytes:
             b"1 0 0 1 %.1f %.1f Tm (%s) Tj" % (x, y, _pdf_escape(text))
         )
     ops.append(b"ET")
-    content = b" ".join(ops)
-    stream = zlib.compress(content)
-    objs = [
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>",
-        b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream"
-        % (len(stream), stream),
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-    ]
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n%s\nendobj\n" % (i, body)
-    xref_at = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offsets:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objs) + 1, xref_at)
-    )
-    return bytes(out)
+    return _pdf_bytes([_PAGE_F1, _flate(b" ".join(ops)), _HELVETICA])
 
 
 # --------------------------------------------------------------- PDF renderer
@@ -419,22 +395,33 @@ def _pdf_escape(text: str) -> bytes:
     return b.replace(b"\\", b"\\\\").replace(b"(", b"\\(").replace(b")", b"\\)")
 
 
-def render_pdf(text: str) -> bytes:
-    """text -> one-page PDF whose only text op is a single Tj literal,
-    plus a non-text (graphics) stream the extractor must skip."""
-    content = b"BT /F1 12 Tf (" + _pdf_escape(text) + b") Tj ET"
+#: Object 3 of a rendered PDF whose text is drawn by content stream 4 in
+#: font F1 (object 5).
+_PAGE_F1 = (
+    b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+    b"/Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>"
+)
+_HELVETICA = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+
+
+def _flate(content: bytes) -> bytes:
+    """A FlateDecode stream object holding ``content``."""
     stream = zlib.compress(content)
-    gfx = zlib.compress(b"0 0 612 792 re f")
+    return b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream" % (
+        len(stream),
+        stream,
+    )
+
+
+def _pdf_bytes(objs: list[bytes]) -> bytes:
+    """The bytes of a one-page PDF: the catalog (object 1), the page tree
+    (object 2, whose one kid is object 3), then ``objs`` numbered from 3,
+    the page first; then the xref table of object offsets and the
+    trailer."""
     objs = [
         b"<< /Type /Catalog /Pages 2 0 R >>",
         b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>",
-        b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream"
-        % (len(stream), stream),
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-        b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream"
-        % (len(gfx), gfx),
+        *objs,
     ]
     out = bytearray(b"%PDF-1.4\n")
     offsets = []
@@ -450,6 +437,15 @@ def render_pdf(text: str) -> bytes:
         % (len(objs) + 1, xref_at)
     )
     return bytes(out)
+
+
+def render_pdf(text: str) -> bytes:
+    """text -> one-page PDF whose only text op is a single Tj literal,
+    plus a non-text (graphics) stream the extractor must skip."""
+    content = b"BT /F1 12 Tf (" + _pdf_escape(text) + b") Tj ET"
+    return _pdf_bytes(
+        [_PAGE_F1, _flate(content), _HELVETICA, _flate(b"0 0 612 792 re f")]
+    )
 
 
 @F.pandas_udf(T.BinaryType())
@@ -472,43 +468,25 @@ def render_pdf_hex(text: str) -> bytes:
         + "".join(f"{code_of[ch]:04X}" for ch in text).encode("ascii")
         + b"> Tj ET"
     )
-    stream = zlib.compress(content)
     bfchars = "".join(
         f"<{code_of[ch]:04X}> <{ord(ch):04X}>\n" for ch in uniq
     ).encode("ascii")
-    cmap = zlib.compress(
+    cmap = (
         b"/CIDInit /ProcSet findresource begin\n"
         b"begincmap\n"
         b"1 begincodespacerange\n<0000> <FFFF>\nendcodespacerange\n"
         + (b"%d beginbfchar\n%sendbfchar\n" % (len(uniq), bfchars))
         + b"endcmap\nend\n"
     )
-    objs = [
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>",
-        b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream"
-        % (len(stream), stream),
-        b"<< /Type /Font /Subtype /Type0 /BaseFont /Synthetic "
-        b"/ToUnicode 6 0 R >>",
-        b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream"
-        % (len(cmap), cmap),
-    ]
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n%s\nendobj\n" % (i, body)
-    xref_at = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offsets:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objs) + 1, xref_at)
+    return _pdf_bytes(
+        [
+            _PAGE_F1,
+            _flate(content),
+            b"<< /Type /Font /Subtype /Type0 /BaseFont /Synthetic "
+            b"/ToUnicode 6 0 R >>",
+            _flate(cmap),
+        ]
     )
-    return bytes(out)
 
 
 def render_scanned_pdf(text: str) -> bytes:
@@ -517,32 +495,17 @@ def render_scanned_pdf(text: str) -> bytes:
     report where each page is a raster with nothing for a text extractor
     to find. ``text`` only sizes the fake raster payload; none of it is
     recoverable — extract_pages must return [] for these bytes."""
-    gfx = zlib.compress(
+    gfx = (
         b"q 612 0 0 792 0 0 cm /Im1 Do Q %% raster placeholder, %d source bytes"
         % len(text.encode("latin-1", "replace"))
     )
-    objs = [
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Contents 4 0 R >>",
-        b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream"
-        % (len(gfx), gfx),
-    ]
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = []
-    for i, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n%s\nendobj\n" % (i, body)
-    xref_at = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offsets:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objs) + 1, xref_at)
+    return _pdf_bytes(
+        [
+            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+            b"/Contents 4 0 R >>",
+            _flate(gfx),
+        ]
     )
-    return bytes(out)
 
 
 @F.pandas_udf(T.BinaryType())

@@ -24,10 +24,11 @@ from test_dataengineer2026_spark.registry import register
 from test_dataengineer2026_spark.session import apply_runtime_confs
 from test_dataengineer2026_spark.streaming.jobs import (
     read_events_stream,
-    read_events_stream_multifile,
+    read_staged_stream,
     run_to_memory,
     run_to_memory_until,
-    stage_events_multifile,
+    stage_events_dir,
+    stage_split_feed,
     stateful_shuffle_partitions,
 )
 
@@ -35,27 +36,20 @@ _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
 def _state_parts(spark: SparkSession, sf_dir: str, feed: str = "plain") -> int:
-    """State-partition count for this query's staged feed, from the
-    scale-adaptive policy in streaming/jobs.py (r18 verdict #1, guide
-    §5): partitions track estimated keyed-state BYTES, not the local
-    core count — at sandbox SFs the per-batch cost is store machinery
-    (load/commit/maintenance per partition per store per batch;
-    listener-measured r19: M13's summed per-batch commit_ms was 50-150 s
-    across 32 partitions x 4 join stores for 13k state rows), at real
-    scale the same formula fans out to thousands of partitions. The
-    stage builders are idempotent and fingerprint-memoized, so calling
-    them again here is cheap."""
-    from test_dataengineer2026_spark.streaming import jobs
-
-    if feed == "multi":
-        d = jobs.stage_events_multifile(spark, sf_dir)
-    elif feed == "late":
-        d = jobs.stage_events_late_feed(spark, sf_dir)
-    elif feed == "dups":
-        d = jobs.stage_events_dup_feed(spark, sf_dir)
-    else:
-        d = jobs.stage_events_dir(sf_dir)
-    return stateful_shuffle_partitions(d)
+    """State-partition count for this query's staged feed: ``"plain"``
+    (``stage_events_dir``'s symlinks) or a split feed of
+    ``stage_split_feed``. The count comes from the scale-adaptive policy
+    in streaming/jobs.py (r18 verdict #1, guide §5): partitions track
+    estimated keyed-state BYTES, not the local core count — at sandbox
+    SFs the per-batch cost is store machinery (load/commit/maintenance
+    per partition per store per batch; listener-measured r19: M13's
+    summed per-batch commit_ms was 50-150 s across 32 partitions x 4
+    join stores for 13k state rows), at real scale the same formula fans
+    out to thousands of partitions. Both stagers reuse a current stage,
+    so calling them again here is cheap."""
+    return stateful_shuffle_partitions(
+        stage_events_dir(sf_dir) if feed == "plain" else stage_split_feed(spark, sf_dir, feed)
+    )
 
 #: M6 state layout: full running aggregate so multi-batch feeds
 #: accumulate instead of emitting per-batch partials; fp_ts/fp_id use -1
@@ -708,7 +702,7 @@ def stream_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     mtime first), the production pattern for newly landed PDFs/objects
     (TEST.md:65); complete-mode counts must equal the batch answer."""
     apply_runtime_confs(spark)
-    s = read_events_stream_multifile(spark, sf_dir)
+    s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))
     agg = s.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     return run_to_memory(
         agg,
@@ -742,7 +736,7 @@ def foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
 
-    s = read_events_stream_multifile(spark, sf_dir).select(
+    s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi")).select(
         "event_id", "event_type", "value"
     )
 
@@ -780,7 +774,7 @@ def watermark_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     eviction contract that bounds memory at 100 TB: closed windows leave
     the state store, open ones stay."""
     apply_runtime_confs(spark)
-    s = read_events_stream_multifile(spark, sf_dir)
+    s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))
     agg = (
         s.withWatermark("ts", "2 days")
         .groupBy(F.window("ts", "1 day"))
@@ -817,13 +811,8 @@ def late_data_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first split boundary may appear. (The batch-side quarantine of
     the dropped set — an anti-join of source vs admitted — is shown in
     tests/test_streaming.py.)"""
-    from test_dataengineer2026_spark.streaming.jobs import (
-        read_staged_stream,
-        stage_events_late_feed,
-    )
-
     apply_runtime_confs(spark)
-    s = read_staged_stream(spark, stage_events_late_feed(spark, sf_dir))
+    s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "late"))
     agg = (
         s.withWatermark("ts", "2 days")
         .groupBy(F.window("ts", "1 day"))
@@ -859,7 +848,9 @@ def trigger_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     backfill-then-stop pattern); the observed (batch_id, row-count)
     sequence must equal the staged file split exactly."""
     apply_runtime_confs(spark)
-    s = read_events_stream_multifile(spark, sf_dir, files_per_trigger=1)
+    s = read_staged_stream(
+        spark, stage_split_feed(spark, sf_dir, "multi"), files_per_trigger=1
+    )
     seen: list[tuple[int, int]] = []
 
     def record(batch_df: DataFrame, batch_id: int) -> None:
@@ -984,7 +975,7 @@ def chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from test_dataengineer2026_spark.determinism import dec, dnarrow
 
     apply_runtime_confs(spark)
-    s = read_events_stream_multifile(spark, sf_dir)
+    s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))
     hourly = (
         s.withWatermark("ts", "2 days")
         .groupBy(F.window("ts", "1 hour"))
@@ -1044,17 +1035,13 @@ def stream_observability(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually alerts on and is engine-version-independent. At 100 TB
     listener progress is driver-side control-plane data, a few KB per
     batch regardless of data volume."""
-    from test_dataengineer2026_spark.streaming.jobs import (
-        MetricsListener,
-        read_staged_stream,
-        stage_events_late_feed,
-    )
+    from test_dataengineer2026_spark.streaming.jobs import MetricsListener
 
     apply_runtime_confs(spark)
     listener = MetricsListener()
     listener.attach(spark)
     try:
-        s = read_staged_stream(spark, stage_events_late_feed(spark, sf_dir))
+        s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "late"))
         observed = s.observe("m12_obs", F.count(F.lit(1)).alias("obs_rows"))
         agg = (
             observed.withWatermark("ts", "2 days")
@@ -1149,7 +1136,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides is what makes the outer join runnable forever."""
     apply_runtime_confs(spark)
     views = (
-        read_events_stream_multifile(spark, sf_dir)
+        read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))
         .filter(F.col("event_type") == "view")
         .select(
             F.col("user_id").alias("v_user"),
@@ -1159,7 +1146,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("v_ts", "1 hour")
     )
     purchases = (
-        read_events_stream_multifile(spark, sf_dir)
+        read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -1255,7 +1242,7 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-emission paths at eviction time."""
     apply_runtime_confs(spark)
     views = (
-        read_events_stream_multifile(spark, sf_dir)
+        read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))
         .filter(F.col("event_type") == "view")
         .select(
             F.col("user_id").alias("v_user"),
@@ -1265,7 +1252,7 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("v_ts", "1 hour")
     )
     purchases = (
-        read_events_stream_multifile(spark, sf_dir)
+        read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -1313,13 +1300,8 @@ def dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     forever. At 100 TB/day the horizon IS the ops knob: state ~=
     keys-per-horizon, replays inside it are absorbed, older replays
     would re-emit and belong to the reconciliation tier instead."""
-    from test_dataengineer2026_spark.streaming.jobs import (
-        read_staged_stream,
-        stage_events_dup_feed,
-    )
-
     apply_runtime_confs(spark)
-    s = read_staged_stream(spark, stage_events_dup_feed(spark, sf_dir))
+    s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "dups"))
     dedup = (
         s.withWatermark("ts", "60 days")
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -1372,7 +1354,6 @@ def checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     from test_dataengineer2026_spark.streaming.jobs import (
         land_pending_file,
         mark_resume_done,
-        read_staged_stream,
         stage_events_resume,
     )
 

@@ -21,8 +21,10 @@ same plan; state stores shard by the groupBy key across executors.
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import os
-from collections.abc import Iterator
+import shutil
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +38,17 @@ EVENTS_SCHEMA = (
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _STAGE_ROOT = os.path.join(_REPO_ROOT, ".tmp", "stream_stage")
+
+
+def _stage_dir(sf_dir: str, suffix: str) -> str:
+    """The stage directory of one feed of ``sf_dir``:
+    ``<sf_dir with "/" -> "_">-<md5(sf_dir)[:10]><suffix>``. The
+    readable prefix lets a caller glob every stage of one ``sf_dir``;
+    the hash keeps apart paths that flatten alike (``/x/a_b`` and
+    ``/x/a/b``)."""
+    tag = sf_dir.strip("/").replace("/", "_")
+    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    return os.path.join(_STAGE_ROOT, f"{tag}-{digest}{suffix}")
 
 
 def _events_leaves(src: str) -> dict[str, str]:
@@ -116,8 +129,7 @@ def stage_events_dir(sf_dir: str) -> str:
     Each part file is linked individually, and stale links from a prior
     layout, a removed part, or a retargeted source are dropped first so
     a leftover symlink can't poison this sf_dir's stream."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(_STAGE_ROOT, tag)
+    d = _stage_dir(sf_dir, "")
     os.makedirs(d, exist_ok=True)
     src = tables.table_path(sf_dir, "events")
     targets = _events_leaves(src)
@@ -156,8 +168,6 @@ def stage_events_dir(sf_dir: str) -> str:
             # or os.symlink raises FileExistsError forever after
             # (r12 advisor finding).
             if os.path.isdir(link):
-                import shutil
-
                 shutil.rmtree(link)
             else:
                 os.remove(link)
@@ -165,85 +175,56 @@ def stage_events_dir(sf_dir: str) -> str:
     return d
 
 
-#: Fixed day-boundary splits for the multi-file staged feed (events span
+#: Fixed day-boundary splits of the "multi" and "late" feeds (events span
 #: 2024-01; boundaries chosen so every split is non-empty at any sf).
 SPLIT_BOUNDS = ("2024-01-11", "2024-01-21")
 
 
-def stage_events_multifile(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events as THREE parquet files split at fixed ts boundaries,
-    with strictly increasing mtimes so the file stream source picks them
-    up oldest-first — a deterministic stand-in for files landing over
-    time in an object-store prefix (TEST.md:65's 10k-PDF feed)."""
-    import shutil
+def _by_day(ev: DataFrame) -> list[DataFrame]:
+    """Events before, between and after the two ``SPLIT_BOUNDS``."""
+    lo, hi = SPLIT_BOUNDS
+    return [
+        ev.filter(F.col("ts") < lo),
+        ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi)),
+        ev.filter(F.col("ts") >= hi),
+    ]
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(_STAGE_ROOT, tag + "_multi")
+
+#: The split feeds: feed name -> rule turning the events table into the
+#: frames the feed delivers, in delivery order (one file each).
+_SPLIT_FEEDS: dict[str, Callable[[DataFrame], list[DataFrame]]] = {
+    # three day ranges landing oldest first: files arriving over time in
+    # an object-store prefix (TEST.md:65's 10k-PDF feed)
+    "multi": _by_day,
+    # the same ranges newest first. Stateful operators filter late input
+    # with the watermark committed as of the PREVIOUS micro-batch, so the
+    # drop shows from the third batch on: batch 0 advances event time,
+    # batch 1 commits the watermark, batch 2's rows are all older than it
+    "late": lambda ev: _by_day(ev)[::-1],
+    # the full table, then a re-delivery of every 5th event (exact
+    # duplicate rows, same event time): the at-least-once shape
+    # (connector retries, replayed offsets) streaming dedup absorbs
+    "dups": lambda ev: [ev, ev.filter(F.col("event_id") % 5 == 0)],
+}
+
+
+def stage_split_feed(spark: SparkSession, sf_dir: str, feed: str) -> str:
+    """Stage the split feed ``feed`` (a key of ``_SPLIT_FEEDS``) of
+    ``sf_dir``'s events: one parquet file per split, named
+    ``00-events.parquet``, ``01-...`` in delivery order, with strictly
+    increasing mtimes so the file stream source picks them up in that
+    order. ``ts`` is written back as long nanos, the staged schema
+    ``read_staged_stream`` reads. A stage whose marker matches the
+    source fingerprint is reused as it is."""
+    split = _SPLIT_FEEDS[feed]
+    d = _stage_dir(sf_dir, "_" + feed)
     done = os.path.join(d, "_STAGED")
     if _stage_is_current(done, sf_dir):
         return d
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
-    ev = tables.load(spark, sf_dir, "events")
-    lo, hi = SPLIT_BOUNDS
-    splits = [
-        ev.filter(F.col("ts") < lo),
-        ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi)),
-        ev.filter(F.col("ts") >= hi),
-    ]
     base = 1_700_000_000
-    for i, part in enumerate(splits):
-        tmp = os.path.join(d, f"_tmp{i}")
-        # ts back to long nanos so the staged schema matches the source's
-        part.withColumn(
-            "ts", (F.unix_micros("ts") * 1000).cast("long")
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(
-            f for f in os.listdir(tmp) if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dst = os.path.join(d, f"{i:02d}-events.parquet")
-        shutil.move(os.path.join(tmp, src), dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (base + i * 100, base + i * 100))
-    _mark_stage_done(done, sf_dir)
-    return d
-
-
-def read_events_stream_multifile(
-    spark: SparkSession, sf_dir: str, files_per_trigger: int = 1
-) -> DataFrame:
-    """Streaming scan of the 3-file staged feed, one file per
-    micro-batch (S9: incremental pickup of newly landed files)."""
-    return read_staged_stream(
-        spark, stage_events_multifile(spark, sf_dir), files_per_trigger
-    )
-
-
-def stage_events_late_feed(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events as THREE files delivered in REVERSE event-time order
-    (newest split first, oldest stragglers last). Spark's stateful
-    operators filter late input with the watermark committed as of the
-    *previous* micro-batch, so the drop becomes observable from the
-    third batch on: batch 0 advances event time, batch 1 commits the
-    watermark, batch 2's rows are all older than it and must be dropped."""
-    import shutil
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(_STAGE_ROOT, tag + "_late")
-    done = os.path.join(d, "_STAGED")
-    if _stage_is_current(done, sf_dir):
-        return d
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    ev = tables.load(spark, sf_dir, "events")
-    lo, hi = SPLIT_BOUNDS
-    splits = [
-        ev.filter(F.col("ts") >= hi),
-        ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi)),
-        ev.filter(F.col("ts") < lo),
-    ]
-    base = 1_700_000_000
-    for i, part in enumerate(splits):
+    for i, part in enumerate(split(tables.load(spark, sf_dir, "events"))):
         tmp = os.path.join(d, f"_tmp{i}")
         part.withColumn(
             "ts", (F.unix_micros("ts") * 1000).cast("long")
@@ -288,8 +269,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-session memo of the footer probe: spark.read.parquet re-lists
     # and re-reads footers (~0.1 s at sf0.1, measured r18) and EVERY
     # streaming query pays it per build. Staged files are symlinks into
-    # an immutable sf_dir (same contract as tables.load's memo), so the
-    # probed schema cannot change within a driver process.
+    # an immutable sf_dir (same contract as tables.load's memo, and
+    # dropped with it by tables.clear_cache), so the probed schema cannot
+    # change until then.
     cache: dict[str, object] | None = getattr(spark, "_graft_stream_schema", None)
     if cache is None:
         cache = {}
@@ -404,13 +386,11 @@ class MetricsListener:
 #: partitions, eliminating ~97% of the store machinery; at a 100 TB
 #: feed the same formula yields thousands of partitions, each holding
 #: ~STATE_TARGET_BYTES of state (the documented RocksDB/HDFS-store
-#: sweet spot range). Both knobs are env-tunable for cluster runs.
-STATE_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STATE_TARGET_BYTES", str(64 << 20))
-)
+#: sweet spot range).
+STATE_TARGET_BYTES = 64 << 20
 #: parquet (zstd/snappy, columnar) -> in-store row bytes expansion; the
 #: conservative side (over-estimating state) only adds partitions.
-STATE_EXPANSION = float(os.environ.get("SPARK_GRAFT_STATE_EXPANSION", "4.0"))
+STATE_EXPANSION = 4.0
 
 
 def stateful_shuffle_partitions(staged: str) -> int:
@@ -567,53 +547,17 @@ def run_to_memory_until(
     return spark.table(name)
 
 
-def stage_events_dup_feed(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events as TWO files: the full table, then a re-delivery of
-    every 5th event (exact duplicate rows, same event time) — the
-    at-least-once delivery shape (connector retries, replayed offsets)
-    that streaming dedup exists to absorb."""
-    import shutil
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(_STAGE_ROOT, tag + "_dups")
-    done = os.path.join(d, "_STAGED")
-    if _stage_is_current(done, sf_dir):
-        return d
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    ev = tables.load(spark, sf_dir, "events")
-    splits = [ev, ev.filter(F.col("event_id") % 5 == 0)]
-    base = 1_700_000_000
-    for i, part in enumerate(splits):
-        tmp = os.path.join(d, f"_tmp{i}")
-        part.withColumn(
-            "ts", (F.unix_micros("ts") * 1000).cast("long")
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(
-            f for f in os.listdir(tmp) if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dst = os.path.join(d, f"{i:02d}-events.parquet")
-        shutil.move(os.path.join(tmp, src), dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (base + i * 100, base + i * 100))
-    _mark_stage_done(done, sf_dir)
-    return d
-
-
 def stage_events_resume(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Staging layout for the checkpoint-resume exhibit (M15): a feed
-    directory that starts with the first TWO splits of the multifile
+    directory that starts with the first TWO splits of the ``"multi"``
     feed, the third split parked outside it (the caller lands it
     between runs via ``land_pending_file``), plus per-source checkpoint
     and sink directories. Everything is keyed to the source parquet's
     fingerprint, so a regenerated testdata round restages from scratch
     while repeat calls within a round reuse the committed sink
     (idempotent, like every other staged feed)."""
-    import shutil
-
-    multi = stage_events_multifile(spark, sf_dir)
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = os.path.join(_STAGE_ROOT, tag + "_resume")
+    multi = stage_split_feed(spark, sf_dir, "multi")
+    root = _stage_dir(sf_dir, "_resume")
     feed = os.path.join(root, "feed")
     layout = {
         "feed": feed,
@@ -637,8 +581,6 @@ def land_pending_file(layout: dict[str, str]) -> None:
     """Deliver the parked third split into the feed with an mtime newer
     than every file already there (the object-store 'new file landed'
     moment between the two runs)."""
-    import shutil
-
     shutil.copy2(layout["pending_src"], layout["pending_dst"])
     newest = max(
         os.stat(os.path.join(layout["feed"], f)).st_mtime

@@ -73,15 +73,18 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def clear_cache(spark: SparkSession) -> None:
-    """Drop the per-session base-relation memo and the per-process
-    footer memo behind ``table_rows``/``widen_if_narrow``.
+    """Drop the per-session base-relation memo, the per-session events
+    stream-schema memo of ``streaming.jobs.read_events_stream``, and the
+    per-process footer memo behind ``table_rows``/``widen_if_narrow``.
 
-    Both memos assume a parquet file is immutable for the life of the
-    driver process. Call this after regenerating files in place, so the
-    next ``load`` re-lists the files and the next layout read re-reads
-    their footers. The harness always regenerates into a fresh process,
-    but external users of ``tables.load`` may not."""
+    All three memos assume a parquet file is immutable for the life of
+    the driver process. Call this after regenerating files in place, so
+    the next ``load`` re-lists the files, the next events stream re-probes
+    the physical ``ts`` type, and the next layout read re-reads their
+    footers. The harness always regenerates into a fresh process, but
+    external users of ``tables.load`` may not."""
     getattr(spark, "_graft_table_cache", {}).clear()
+    getattr(spark, "_graft_stream_schema", {}).clear()
     _LAYOUT_CACHE.clear()
 
 

@@ -36,10 +36,13 @@ import pyarrow.parquet as pq
 
 
 def _physical_lines(path: str, *needles: str) -> list[str]:
+    """The schema lines naming a needle column. Needles match whole words
+    only: the schema's first line is its object repr, whose hex address
+    can hold a needle (``0x...bbd1540`` holds ``d15``)."""
     return [
         ln.strip()
         for ln in str(pq.ParquetFile(path).schema).splitlines()
-        if any(n in ln for n in needles)
+        if any(re.search(rf"\b{re.escape(n)}\b", ln) for n in needles)
     ]
 
 

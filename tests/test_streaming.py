@@ -138,13 +138,14 @@ def test_stateful_funnel_folds_state_across_batches(spark):
         funnel_state_fn,
     )
     from test_dataengineer2026_spark.streaming.jobs import (
-        read_events_stream_multifile,
+        read_staged_stream,
         run_to_memory,
+        stage_split_feed,
     )
     from test_dataengineer2026_spark import tables
 
     sf_dir = "/root/testdata/sf0.001"
-    s = read_events_stream_multifile(spark, sf_dir)  # 3 files, 1/batch
+    s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))  # 3 files, 1/batch
     result = s.groupBy("user_id").applyInPandasWithState(
         funnel_state_fn,
         outputStructType=FUNNEL_OUT_SCHEMA,
@@ -210,8 +211,9 @@ def test_m10_stream_stream_join_multibatch(spark):
     in-horizon pair — the result equals the batch self-join exactly."""
     from test_dataengineer2026_spark import tables
     from test_dataengineer2026_spark.streaming.jobs import (
-        read_events_stream_multifile,
+        read_staged_stream,
         run_to_memory,
+        stage_split_feed,
     )
     from tests.conftest import SF_DIR
 
@@ -223,10 +225,10 @@ def test_m10_stream_stream_join_multibatch(spark):
         )
 
     views = side(
-        read_events_stream_multifile(spark, SF_DIR), "view", "v"
+        read_staged_stream(spark, stage_split_feed(spark, SF_DIR, "multi")), "view", "v"
     ).withWatermark("v_ts", "1 hour")
     purchases = side(
-        read_events_stream_multifile(spark, SF_DIR), "purchase", "p"
+        read_staged_stream(spark, stage_split_feed(spark, SF_DIR, "multi")), "purchase", "p"
     ).withWatermark("p_ts", "1 hour")
     joined = views.join(
         purchases,
@@ -258,13 +260,14 @@ def test_m13_left_outer_join_state_is_watermark_bounded(spark):
     added, with nonzero removals. Without eviction the join's memory
     grows with the stream and the operator is not runnable forever."""
     from test_dataengineer2026_spark.streaming.jobs import (
-        read_events_stream_multifile,
+        read_staged_stream,
+        stage_split_feed,
     )
     from tests.conftest import SF_DIR
 
     def side(typ, prefix):
         return (
-            read_events_stream_multifile(spark, SF_DIR)
+            read_staged_stream(spark, stage_split_feed(spark, SF_DIR, "multi"))
             .filter(F.col("event_type") == typ)
             .select(
                 F.col("user_id").alias(f"{prefix}_user"),
@@ -302,8 +305,9 @@ def test_m12_listener_captures_progress_and_observed_metrics(spark):
     termination."""
     from test_dataengineer2026_spark.streaming.jobs import (
         MetricsListener,
-        read_events_stream_multifile,
+        read_staged_stream,
         run_to_memory,
+        stage_split_feed,
     )
 
     from tests.conftest import SF_DIR
@@ -311,7 +315,7 @@ def test_m12_listener_captures_progress_and_observed_metrics(spark):
     lst = MetricsListener()
     lst.attach(spark)
     try:
-        s = read_events_stream_multifile(spark, SF_DIR)
+        s = read_staged_stream(spark, stage_split_feed(spark, SF_DIR, "multi"))
         obs = s.observe("t_obs", F.count(F.lit(1)).alias("obs_rows"))
         agg = obs.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
         run_to_memory(agg, "t_m12_listener", "complete")
@@ -336,11 +340,11 @@ def test_m15_resume_processes_only_the_new_file(spark, tmp_path):
     from test_dataengineer2026_spark import tables
     from test_dataengineer2026_spark.streaming.jobs import (
         read_staged_stream,
-        stage_events_multifile,
+        stage_split_feed,
     )
 
     sf = "/root/testdata/sf0.001"
-    multi = stage_events_multifile(spark, sf)
+    multi = stage_split_feed(spark, sf, "multi")
     feed = str(tmp_path / "feed")
     os.makedirs(feed)
     for name in ("00-events.parquet", "01-events.parquet"):
@@ -1498,8 +1502,9 @@ def test_transform_with_state_list_and_map_state(spark):
     from test_dataengineer2026_spark import tables
     from test_dataengineer2026_spark.queries.streaming_q import _ROCKSDB_PROVIDER
     from test_dataengineer2026_spark.streaming.jobs import (
-        read_events_stream_multifile,
+        read_staged_stream,
         run_to_memory,
+        stage_split_feed,
     )
 
     _tws_ready_or_skip(spark)
@@ -1542,7 +1547,7 @@ def test_transform_with_state_list_and_map_state(spark):
             pass
 
     sf_dir = "/root/testdata/sf0.001"
-    s = read_events_stream_multifile(spark, sf_dir)  # 3 files, 1/batch
+    s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))  # 3 files, 1/batch
     conf_key = "spark.sql.streaming.stateStore.providerClass"
     prev_provider = spark.conf.get(conf_key, None)
     spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
@@ -2387,3 +2392,112 @@ def test_stage_marker_is_stale_in_a_relocated_checkout(tmp_path):
     shutil.copytree(first, second)
     assert jobs._stage_is_current(str(first / "_DONE"), SF_DIR)
     assert not jobs._stage_is_current(str(second / "_DONE"), SF_DIR)
+
+
+def test_stage_dirs_of_alike_flattening_sf_dirs_do_not_collide(tmp_path):
+    """``<root>/a_b`` and ``<root>/a/b`` flatten to the same readable
+    prefix; each must still get its own stage, linking its own events,
+    and the prefix must stay a glob over every stage of one sf_dir."""
+    from test_dataengineer2026_spark.streaming import jobs
+    from tests.conftest import SF_DIR
+
+    flat, nested = tmp_path / "a_b", tmp_path / "a" / "b"
+    for sf in (flat, nested):
+        sf.mkdir(parents=True)
+        shutil.copyfile(f"{SF_DIR}/events.parquet", sf / "events.parquet")
+    d_flat, d_nested = jobs.stage_events_dir(str(flat)), jobs.stage_events_dir(str(nested))
+    assert d_flat != d_nested
+    for sf, d in ((flat, d_flat), (nested, d_nested)):
+        link = os.path.join(d, "events.parquet")
+        assert os.path.realpath(link) == os.path.realpath(sf / "events.parquet")
+        prefix = str(sf).strip("/").replace("/", "_")
+        for suffix in ("", "_multi", "_late", "_dups", "_resume"):
+            assert os.path.basename(jobs._stage_dir(str(sf), suffix)).startswith(prefix)
+    assert jobs._stage_dir(str(flat), "_multi") != jobs._stage_dir(str(nested), "_multi")
+
+
+def test_clear_cache_drops_the_stream_schema_memo(spark, tmp_path):
+    """``read_events_stream`` memoizes the physical type of events.ts
+    per stage. After events.parquet is rewritten in place from
+    TIMESTAMP(NANOS) to TIMESTAMP(MICROS), ``tables.clear_cache`` must
+    drop that memo with the others, so the stream reads ``ts`` exactly
+    as ``tables.load`` does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from test_dataengineer2026_spark import tables
+    from test_dataengineer2026_spark.streaming.jobs import read_events_stream, run_to_memory
+    from tests.conftest import SF_DIR
+
+    src = pq.read_table(f"{SF_DIR}/events.parquet")
+    i = src.schema.get_field_index("ts")
+    sf = tmp_path / "sf"
+    sf.mkdir()
+
+    def write_ts(unit):
+        t = src.set_column(i, "ts", src.column("ts").cast(pa.timestamp(unit)))
+        pq.write_table(t, sf / "events.parquet")
+        assert pq.read_schema(sf / "events.parquet").field("ts").type == pa.timestamp(unit)
+
+    def streamed_vs_loaded(name):
+        stream = read_events_stream(spark, str(sf)).select("event_id", "ts")
+        got = run_to_memory(stream, name, "append")
+        want = tables.load(spark, str(sf), "events").select("event_id", "ts")
+        return dict(got.collect()), dict(want.collect())
+
+    write_ts("ns")
+    got, want = streamed_vs_loaded("t_schema_memo_ns")
+    assert got == want and len(want) > 0
+    write_ts("us")
+    tables.clear_cache(spark)
+    got, want = streamed_vs_loaded("t_schema_memo_us")
+    assert got == want and len(want) > 0
+
+
+@pytest.mark.parametrize("feed", ["multi", "late", "dups"])
+def test_split_feed_contract(spark, feed):
+    """Each split feed stages one file per split, named ``00-...``,
+    ``01-...`` in delivery order, with strictly increasing mtimes, and
+    each file holds exactly that split's events (``ts`` as long nanos).
+    A second call reuses the stage: it rewrites nothing."""
+    from collections import Counter
+
+    from test_dataengineer2026_spark import tables
+    from test_dataengineer2026_spark.streaming import jobs
+    from tests.conftest import SF_DIR as sf
+
+    ev = tables.load(spark, sf, "events")
+    lo, hi = "2024-01-11", "2024-01-21"
+    by_day = [
+        ev.filter(F.col("ts") < lo),
+        ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi)),
+        ev.filter(F.col("ts") >= hi),
+    ]
+    want = {
+        "multi": by_day,
+        "late": by_day[::-1],
+        "dups": [ev, ev.filter(F.col("event_id") % 5 == 0)],
+    }[feed]
+
+    d = jobs.stage_split_feed(spark, sf, feed)
+    names = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+    assert names == [f"{i:02d}-events.parquet" for i in range(len(want))]
+    mtimes = [os.stat(os.path.join(d, f)).st_mtime_ns for f in names]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+    for name, split in zip(names, want):
+        nanos = split.withColumn("ts", (F.unix_micros("ts") * 1000).cast("long"))
+        got = spark.read.parquet(os.path.join(d, name))
+        assert got.columns == nanos.columns
+        assert Counter(map(tuple, got.collect())) == Counter(map(tuple, nanos.collect())), name
+
+    def snapshot():
+        return {
+            f: (st.st_ino, st.st_mtime_ns, st.st_size)
+            for f in sorted(os.listdir(d))
+            for st in (os.stat(os.path.join(d, f)),)
+        }
+
+    before = snapshot()
+    assert "_STAGED" in before
+    assert jobs.stage_split_feed(spark, sf, feed) == d
+    assert snapshot() == before
