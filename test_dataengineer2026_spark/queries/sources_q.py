@@ -16,14 +16,14 @@ from test_dataengineer2026_spark.determinism import dsum, sql_dsum
 from test_dataengineer2026_spark.registry import register
 from test_dataengineer2026_spark.session import apply_runtime_confs
 from test_dataengineer2026_spark.sources import io as sio
+from test_dataengineer2026_spark.staging import stage_tag
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _OUT_ROOT = os.path.join(_REPO_ROOT, ".tmp", "sink_stage")
 
 
 def _stage(name: str, sf_dir: str) -> str:
-    tag = sf_dir.strip("/").replace("/", "_")
-    return os.path.join(_OUT_ROOT, tag, name)
+    return os.path.join(_OUT_ROOT, stage_tag(sf_dir), name)
 
 
 @register(

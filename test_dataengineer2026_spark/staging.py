@@ -91,6 +91,19 @@ def _prune_siblings(root: str) -> None:
             pass
 
 
+def stage_tag(sf_dir: str) -> str:
+    """The name that keys the reusable stages of ``sf_dir`` (the stream
+    feeds and the sink round-trips): ``<absolute sf_dir with "/" ->
+    "_">-<md5[:10]>``. The path is made absolute first, so one relative
+    ``sf_dir`` used from two working directories gets two stages. The
+    readable prefix lets a caller glob every stage of one ``sf_dir``;
+    the hash keeps apart paths that flatten alike (``/x/a_b`` and
+    ``/x/a/b``)."""
+    sf_dir = os.path.abspath(sf_dir)
+    flat = sf_dir.strip("/").replace("/", "_")
+    return f"{flat}-{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+
+
 def staged_dir(sf_dir: str, kind: str) -> str:
     """A private staging directory for (``sf_dir``, this process) under
     ``<repo>/.tmp/<kind>/``, pruning dead/stale siblings and arming the

@@ -21,15 +21,16 @@ same plan; state stores shard by the groupBy key across executors.
 from __future__ import annotations
 
 import contextlib
-import hashlib
 import os
 import shutil
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from test_dataengineer2026_spark import tables
+from test_dataengineer2026_spark.staging import stage_tag
 
 EVENTS_SCHEMA = (
     "event_id long, ts long, user_id long, event_type string, value double, "
@@ -42,13 +43,8 @@ _STAGE_ROOT = os.path.join(_REPO_ROOT, ".tmp", "stream_stage")
 
 def _stage_dir(sf_dir: str, suffix: str) -> str:
     """The stage directory of one feed of ``sf_dir``:
-    ``<sf_dir with "/" -> "_">-<md5(sf_dir)[:10]><suffix>``. The
-    readable prefix lets a caller glob every stage of one ``sf_dir``;
-    the hash keeps apart paths that flatten alike (``/x/a_b`` and
-    ``/x/a/b``)."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return os.path.join(_STAGE_ROOT, f"{tag}-{digest}{suffix}")
+    ``<staging.stage_tag(sf_dir)><suffix>``."""
+    return os.path.join(_STAGE_ROOT, stage_tag(sf_dir) + suffix)
 
 
 def _events_leaves(src: str) -> dict[str, str]:
@@ -128,7 +124,10 @@ def stage_events_dir(sf_dir: str) -> str:
     files, and every stream query dies with UNABLE_TO_INFER_SCHEMA).
     Each part file is linked individually, and stale links from a prior
     layout, a removed part, or a retargeted source are dropped first so
-    a leftover symlink can't poison this sf_dir's stream."""
+    a leftover symlink can't poison this sf_dir's stream. A relative
+    ``sf_dir`` is resolved first: the links must not point back
+    relative to the stage."""
+    sf_dir = os.path.abspath(sf_dir)
     d = _stage_dir(sf_dir, "")
     os.makedirs(d, exist_ok=True)
     src = tables.table_path(sf_dir, "events")
@@ -216,6 +215,7 @@ def stage_split_feed(spark: SparkSession, sf_dir: str, feed: str) -> str:
     order. ``ts`` is written back as long nanos, the staged schema
     ``read_staged_stream`` reads. A stage whose marker matches the
     source fingerprint is reused as it is."""
+    sf_dir = os.path.abspath(sf_dir)
     split = _SPLIT_FEEDS[feed]
     d = _stage_dir(sf_dir, "_" + feed)
     done = os.path.join(d, "_STAGED")
@@ -266,20 +266,21 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrinks every timestamp 1000x)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     d = stage_events_dir(sf_dir)
-    # Per-session memo of the footer probe: spark.read.parquet re-lists
-    # and re-reads footers (~0.1 s at sf0.1, measured r18) and EVERY
-    # streaming query pays it per build. Staged files are symlinks into
-    # an immutable sf_dir (same contract as tables.load's memo, and
-    # dropped with it by tables.clear_cache), so the probed schema cannot
-    # change until then.
+    # Per-session memo of the footer probe, which EVERY streaming query
+    # would otherwise pay per build. Staged files are symlinks into an
+    # immutable sf_dir (same contract as tables.load's memo, and dropped
+    # with it by tables.clear_cache), so the probed schema cannot change
+    # until then. The single-file stage's footer is read on the driver;
+    # a multi-file stage falls back to an inferring read (one job).
     cache: dict[str, object] | None = getattr(spark, "_graft_stream_schema", None)
     if cache is None:
         cache = {}
         spark._graft_stream_schema = cache
     schema = cache.get(d)
     if schema is None:
-        batch = spark.read.parquet(d)
-        schema = "nanos" if dict(batch.dtypes).get("ts") == "bigint" else batch.schema
+        schema = tables.parquet_schema(spark, d) or spark.read.parquet(d).schema
+        if "ts" in schema.names and schema["ts"].dataType == LongType():
+            schema = "nanos"
         cache[d] = schema
     if schema == "nanos":
         return (

@@ -6,10 +6,14 @@ documents embeddings — one parquet file each under an sf directory.
 
 from __future__ import annotations
 
+import json
 import os
 
+from py4j.protocol import Py4JError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -41,12 +45,17 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the DuckDB oracle sees (its view layer truncates ns -> us the same
     way). Float division would corrupt the value: epoch-nanos (~1.7e18)
     exceed double's 2^53 integer range.
+
+    The schema comes from ``parquet_schema`` (one footer, read on the
+    driver) where it answers, so loading a single-file table runs no
+    Spark job; other layouts are read with schema inference.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    # Per-session memo of the ten base relations: spark.read.parquet
-    # re-lists files and re-reads footers on every call (~50-200 ms at
-    # sf0.1), and multi-table queries load up to five tables per build.
+    # Per-session memo of the ten base relations: a load lists the
+    # table's files and reads a footer (~30 ms per table at sf0.1 on the
+    # driver, ~100 ms and one Spark job with inference; local[2], 4
+    # cores), and multi-table queries load up to five tables per build.
     # DataFrames are immutable, so handing every caller the same base
     # relation is safe; the memo never covers arbitrary paths (sink
     # roundtrips and probes read their own outputs directly), and a
@@ -59,17 +68,76 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (sf_dir, name)
     if key in cache:
         return cache[key]
+    path = table_path(sf_dir, name)
     if name == "events":
+        # before the footer read: the conf decides how NANOS converts
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-    else:
-        df = spark.read.parquet(table_path(sf_dir, name))
+    schema = parquet_schema(spark, path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     cache[key] = df
     return df
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file listing keeps a directory entry named
+    ``name`` (its ``HadoopFSUtils.shouldFilterOutPathName``, negated):
+    it drops ``.``-prefixed names, ``_``-prefixed ones that hold no
+    ``=``, and ``._COPYING_`` leftovers, but keeps the parquet summary
+    files."""
+    hidden = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return not hidden or name.startswith(("_common_metadata", "_metadata"))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, read from
+    one footer on the driver: no Spark job.
+
+    Inference runs a distributed job to read even one footer; this asks
+    Spark's own footer reader and converter through py4j instead
+    (``ParquetFileFormat.readParquetFootersInParallel`` with the
+    session's Hadoop conf, then ``readSchema``), so the session's confs
+    apply as they do for inference: ``nanosAsLong``, NTZ inference,
+    binary-as-string, INT96, Spark's row metadata and the encryption
+    conf. It answers only where inference (``mergeSchema`` off) reads
+    exactly that one footer: a single file, or a directory whose only
+    listed entry is one data file (a Spark-written single-part
+    directory, a stream stage). For several files, partition
+    directories, ``_metadata``/``_common_metadata`` summaries, a glob,
+    or any error it returns None, and the caller reads with inference,
+    which then reports whatever error there is."""
+    if any(c in path for c in "{}[]*?\\"):
+        return None
+    jvm, jss = spark._jvm, spark._jsparkSession
+    try:
+        conf = jss.sessionState().newHadoopConf()
+        jpath = jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(conf)
+        status = fs.getFileStatus(jpath)
+        if status.isDirectory():
+            listed = [s for s in fs.listStatus(jpath) if _listed(s.getPath().getName())]
+            if len(listed) != 1:
+                return None
+            status = listed[0]
+            # one data file: not a partition directory, not a summary file
+            if not status.isFile() or status.getPath().getName().startswith("_"):
+                return None
+        fmt = getattr(
+            getattr(jvm.org.apache.spark.sql.execution.datasources.parquet, "ParquetFileFormat$"),
+            "MODULE$",
+        )
+        footers = fmt.readParquetFootersInParallel(conf, jvm.PythonUtils.toSeq([status]), False)
+        schema = fmt.readSchema(footers, jss)
+    except (Py4JError, CapturedException):
+        return None
+    if schema.isEmpty():
+        return None
+    return StructType.fromJson(json.loads(schema.get().json()))
 
 
 def clear_cache(spark: SparkSession) -> None:
@@ -259,9 +327,9 @@ _VIEWS_MARKER = "spark.graft.registered_views_sf_dir"
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all tables as temp views for the spark.sql() surface.
 
-    Idempotent per (session, sf_dir): re-reading ten parquet footers and
-    re-creating ten temp views costs ~0.5-1.0 s per call (measured at
-    sf0.1 — it was most of SQL1's per-call build time), and every
+    Idempotent per (session, sf_dir): loading ten tables and re-creating
+    ten temp views costs ~0.4 s per call (sf0.1, local[2] on 4 cores;
+    ~1.0 s and ten Spark jobs when every schema was inferred), and every
     spark.sql query calls this. Re-registration happens only when the
     sf_dir changes or a view has been dropped; temp views snapshot the
     file listing at creation, so same-path same-session reuse reads the

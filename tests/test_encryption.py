@@ -220,3 +220,50 @@ def test_plaintext_footer_partial_degradation(enc_store, tmp_path):
     ).fetchone() == (50, 1225)  # unencrypted column exact, keyless
     with pytest.raises(duckdb.Error):
         con.execute(f"SELECT SUM(v) FROM read_parquet('{f}')").fetchone()
+
+
+_KEYED_SCHEMA = """
+import sys
+
+jar, out_enc, key_b64, root = sys.argv[1:5]
+sys.path.insert(0, root)
+from pyspark.sql import SparkSession
+from test_dataengineer2026_spark import tables
+
+spark = (SparkSession.builder.master("local[1]").appName("encschema")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.extraClassPath", jar)
+    .config("spark.executor.extraClassPath", jar)
+    .getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+hc = spark.sparkContext._jsc.hadoopConfiguration()
+hc.set("parquet.crypto.factory.class",
+       "org.apache.parquet.crypto.keytools.PropertiesDrivenCryptoFactory")
+hc.set("parquet.encryption.kms.client.class", "sparkgraft.LocalWrapKMS")
+hc.set("parquet.encryption.key.list", "k1:%s, kf:%s" % (key_b64, key_b64))
+s = tables.parquet_schema(spark, out_enc)
+same = s is not None and (
+    spark.read.schema(s).parquet(out_enc).schema == spark.read.parquet(out_enc).schema)
+print("KEYED SCHEMA", "SAME" if same else "DIFFERENT", s)
+"""
+
+
+def test_driver_schema_read_of_an_encrypted_footer(enc_store, spark):
+    """``tables.parquet_schema`` reads footers with the session's Hadoop
+    conf. Without keys the encrypted footer cannot be read: it answers
+    None and the inferring read fails as before. With the crypto factory
+    and keys set, it reads the footer and equals inference."""
+    from test_dataengineer2026_spark import tables
+
+    out_enc, _, _ = enc_store
+    assert tables.parquet_schema(spark, out_enc) is None
+    with pytest.raises(Exception):
+        spark.read.parquet(out_enc)
+    jar = os.path.join(os.path.dirname(out_enc), "localwrapkms.jar")
+    key = base64.b64encode(b"0123456789012345").decode()
+    r = subprocess.run(
+        [sys.executable, "-c", _KEYED_SCHEMA, jar, out_enc, key, ROOT],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-1500:]
+    assert "KEYED SCHEMA SAME" in r.stdout, r.stdout

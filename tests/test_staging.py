@@ -79,3 +79,27 @@ def test_age_fallback_only_for_inconclusive_probe(tmp_path, monkeypatch):
     staging._prune_siblings(str(tmp_path))
     assert fresh.exists()
     assert not stale.exists()
+
+
+def test_stage_tag_resolves_a_relative_sf_dir(tmp_path, monkeypatch):
+    """One relative sf_dir used from two working directories names two
+    sf_dirs, so it gets two tags; an absolute path keeps its tag."""
+    for d in ("one", "two"):
+        (tmp_path / d).mkdir()
+    monkeypatch.chdir(tmp_path / "one")
+    one = staging.stage_tag("sf")
+    monkeypatch.chdir(tmp_path / "two")
+    two = staging.stage_tag("sf")
+    assert one != two
+    assert one == staging.stage_tag(str(tmp_path / "one" / "sf"))
+    flat = str(tmp_path / "one" / "sf").strip("/").replace("/", "_")
+    assert one.startswith(flat + "-")
+
+
+def test_sink_stages_of_alike_flattening_sf_dirs_do_not_collide():
+    """``/x/a_b`` and ``/x/a/b`` flatten alike; the S8/S-family and N-family
+    sink round-trips must still write them to two stage directories."""
+    from test_dataengineer2026_spark.queries import nested_q, sources_q
+
+    for mod in (sources_q, nested_q):
+        assert mod._stage("out", "/x/a_b") != mod._stage("out", "/x/a/b"), mod.__name__

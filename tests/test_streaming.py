@@ -2416,6 +2416,29 @@ def test_stage_dirs_of_alike_flattening_sf_dirs_do_not_collide(tmp_path):
     assert jobs._stage_dir(str(flat), "_multi") != jobs._stage_dir(str(nested), "_multi")
 
 
+def test_stream_over_a_relative_sf_dir_reads_the_loaded_rows(spark, tmp_path, monkeypatch):
+    """A relative sf_dir names the same table for the stream as for
+    ``tables.load``: the stage links to the resolved path, not to a
+    path relative to the stage directory. Spark resolves a relative
+    path against the driver JVM's working directory, so the test keeps
+    the Python process there and names the sf_dir relative to it."""
+    from test_dataengineer2026_spark import tables
+    from test_dataengineer2026_spark.streaming.jobs import read_events_stream, run_to_memory
+    from tests.conftest import SF_DIR
+
+    cwd = spark.sparkContext._jvm.System.getProperty("user.dir")
+    monkeypatch.chdir(cwd)
+    (tmp_path / "sf").mkdir()
+    shutil.copyfile(f"{SF_DIR}/events.parquet", tmp_path / "sf" / "events.parquet")
+    sf = os.path.relpath(tmp_path / "sf", cwd)
+    assert not os.path.isabs(sf)
+    stream = read_events_stream(spark, sf).select("event_id", "ts")
+    got = run_to_memory(stream, "t_relative_sf_dir", "append")
+    want = tables.load(spark, sf, "events").select("event_id", "ts")
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert want.count() > 0
+
+
 def test_clear_cache_drops_the_stream_schema_memo(spark, tmp_path):
     """``read_events_stream`` memoizes the physical type of events.ts
     per stage. After events.parquet is rewritten in place from
