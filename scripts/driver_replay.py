@@ -25,7 +25,7 @@ import time
 # naive UTC wall times. Under a UTC host this is an identity; under any
 # other TZ every timestamp column shifts by the UTC offset and the
 # compare fails spuriously (verified: TZ=Asia/Tokyo shifted O2/S17 by
-# +09:00). Queries already pin the SESSION timezone (apply_runtime_confs)
+# +09:00). Queries already pin the SESSION timezone (registry.register)
 # — this pins the rendering boundary the session conf cannot reach.
 os.environ["TZ"] = "UTC"
 time.tzset()
@@ -113,9 +113,10 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     # Robustness-probe knob: REPLAY_EXTRA_CONFS="k=v;k=v" perturbs the
     # session (e.g. spark.sql.codegen.wholeStage=false to replay the
-    # whole registry on the interpreted path). Confs that queries pin
-    # themselves via apply_runtime_confs (timezone, AQE, ANSI) win over
-    # this knob by design — those are part of the queries' contract.
+    # whole registry on the interpreted path). Confs that every registered
+    # query pins through registry.register's apply_runtime_confs
+    # (timezone, AQE, ANSI) win over this knob by design — those are
+    # part of the queries' contract.
     for kv in filter(None, os.environ.get("REPLAY_EXTRA_CONFS", "").split(";")):
         if "=" not in kv:
             raise SystemExit(

@@ -37,11 +37,9 @@ from test_dataengineer2026_spark.determinism import (
     sql_dsum,
 )
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: TPC-H-Q1-style pricing summary over lineitem."""
-    apply_runtime_confs(spark)
     one = F.lit(1).cast(RATE)
     # Scale-adaptive scan widening (r19, guide §2.5/§6 — verdict #6):
     # the single-row-group fixture feeds ONE task, fusing the scan and
@@ -101,7 +99,7 @@ GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
 """
 
-register("A1_group_agg", oracle=PRICING_SUMMARY_ORACLE, tags=("agg", "flagship"))(
+pricing_summary = register("A1_group_agg", oracle=PRICING_SUMMARY_ORACLE, tags=("agg", "flagship"))(
     pricing_summary
 )
 
@@ -123,7 +121,6 @@ FROM orders
 )
 def global_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: whole-table aggregate (no grouping -> single reduced row)."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     return o.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -151,7 +148,6 @@ GROUP BY l_returnflag
 )
 def count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: exact distinct cardinality per group (expand+two-phase agg)."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
@@ -180,7 +176,6 @@ def approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     production cardinalities the same plan holds with bounded error and
     O(registers) memory instead of O(distinct values).
     """
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return li.groupBy("l_linestatus").agg(
         F.approx_count_distinct("l_returnflag", 0.01).alias("n_flags"),
@@ -205,7 +200,6 @@ GROUP BY l_linestatus
 def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5: conditional aggregates (per-category columns like the spec's
     resource tables, TEST_TECNICO_INGENIERO_DATOS.md:38-42)."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return li.groupBy("l_linestatus").agg(
         dnarrow(F.sum(F.when(F.col("l_returnflag") == "A", dec("l_quantity")))).alias("qty_returned_a"),
@@ -232,7 +226,6 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)
 def grouping_sets_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: rollup subtotals — the 'Measured + Indicated' / 'Proven +
     Probable' rollup rows seen in the reference sample PDF's Table 1-2."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         (F.grouping("l_returnflag") + F.lit(2) * F.grouping("l_linestatus"))
@@ -257,7 +250,6 @@ GROUP BY l_returnflag
 )
 def pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: category rows -> columns (report-shaped output, TEST.md:15)."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
@@ -281,7 +273,6 @@ GROUP BY c_nationkey
 def collect_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: per-group array gathering (all grades per doc, TEST.md:38-42);
     rendered as a sorted joined string for cross-engine comparison."""
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer")
     return c.groupBy("c_nationkey").agg(
         F.array_join(F.array_sort(F.collect_set("c_mktsegment")), ",").alias("segments"),
@@ -308,7 +299,6 @@ def stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     stddev is computed via exact decimal sums (order-independent); median /
     exact percentile interpolate identically on both engines.
     """
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         dstddev("l_quantity").alias("sd_qty"),
@@ -347,7 +337,6 @@ WHERE r.rk = 1
 def mode_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10: representative value per group — deterministic mode (ties broken
     by value) plus min_by/max_by over the unique order key."""
-    apply_runtime_confs(spark)
     from pyspark.sql import Window as W
 
     o = tables.load(spark, sf_dir, "orders")
@@ -395,7 +384,6 @@ def hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily answer directly from events). At 100 TB this is the
     cascade that turns a rescan of a year of raw data into a scan of
     365 daily partials."""
-    apply_runtime_confs(spark)
     ev = tables.load(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
@@ -440,7 +428,6 @@ def incremental_rollup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     full recompute. The exact-decimal sums stay DECIMAL through the
     merge and narrow to DOUBLE once, so incremental and batch answers
     are bit-identical."""
-    apply_runtime_confs(spark)
     from test_dataengineer2026_spark.determinism import dec, dnarrow
 
     e = tables.load(spark, sf_dir, "events")
@@ -515,7 +502,6 @@ def histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bin-floor estimates are pure integer math — engine-identical, unlike
     interpolated approx_percentile internals (A4's approx path stays the
     built-in; this is the verifiable twin, same contract as A12 vs A4)."""
-    apply_runtime_confs(spark)
     from pyspark.sql import Window as W
 
     li = tables.load(spark, sf_dir, "lineitem")
@@ -562,7 +548,6 @@ def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle of O(groups x 4) partial states, never four scans.
     GROUPING() bits disambiguate subtotal rows from genuine NULL keys
     on both engines."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         (F.grouping("o_orderstatus") + F.lit(2) * F.grouping("o_orderpriority"))
@@ -600,7 +585,6 @@ def grouped_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded groups, which is exactly what A13 (bin histogram, O(bins)
     state) and A4 (fixed-size sketch) are for. The three operators
     document the accuracy/state trade-off ladder."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     return d.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -639,7 +623,6 @@ def sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     day. Shuffle volume is O(active-pairs x 7), independent of raw
     event count; the oracle states the same window as the naive range
     join, proving the rewrite is semantics-preserving."""
-    apply_runtime_confs(spark)
     ev = tables.load(spark, sf_dir, "events")
     day = F.to_date("ts").alias("day")
     spine = ev.select(day).distinct()
@@ -694,7 +677,6 @@ def listagg_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     values), so at 100 TB you run it on pre-bounded groups (as here:
     25 nations over 5 regions), never on unbounded text groups —
     same discipline as A8."""
-    apply_runtime_confs(spark)
     n = tables.load(spark, sf_dir, "nation")
     r = tables.load(spark, sf_dir, "region")
     return (

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.operators.asof import asof_join_latest, range_join
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 
 @register(
@@ -39,7 +38,6 @@ def range_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     a nested loop. Pure interval joins without an equi key must bucketize
     time first (see operators/asof.py docstring).
     """
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     o = tables.load(spark, sf_dir, "orders")
     joined = range_join(
@@ -86,7 +84,6 @@ def asof_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id + one sort, linear per partition; scales where the oracle's
     join+rank formulation (quadratic per user) cannot.
     """
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", F.col("value").alias("purchase_value")
@@ -148,7 +145,6 @@ def interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     and per-cell fan-out is bounded by cell population — the same
     bucketize-then-equi-join trick as D2's LSH bands, applied to time.
     """
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") > 450000
     )
@@ -237,7 +233,6 @@ def asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     spells the same semantics as a windowed join for the cross-engine
     check; that formulation is quadratic per user and stays in the
     oracle."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", F.col("value").alias("purchase_value")

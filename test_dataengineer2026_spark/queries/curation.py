@@ -31,7 +31,6 @@ from pyspark.sql import Window as W
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.queries.dedup import _PARAS_CTE
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 # C2/C3: per-language sampling knobs. Weights are the *target* corpus
 # mixture; 2^32 is the hash-bucket denominator.
@@ -74,7 +73,6 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate is a pure map-side filter (no shuffle, no RNG state), so
     Catalyst pushes it into the scan and the plan is a single stage at
     any scale."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     rate = F.coalesce(
         *[
@@ -118,7 +116,6 @@ def mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     papers), computed from corpus stats in one partial+final aggregation
     — at 100 TB the per-language token totals are a map-side-combined
     agg over a scan that reads only (lang, text)."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     weight = F.coalesce(
         *[
@@ -168,7 +165,6 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     One narrow explode, no shuffle; at 100 TB output size is
     size(text) * size/stride ≈ 1.33x input and streams straight to a
     partitioned sink."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     starts = F.explode(
         F.sequence(F.lit(1), F.greatest(F.length("text"), F.lit(1)), F.lit(CHUNK_STRIDE))
@@ -216,7 +212,6 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort — at 100 TB each shard packs independently (exactly how a
     distributed tokenize-and-pack job shards), instead of serializing
     on one global cumulative sum."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     t = d.select(
         "doc_id", "source", F.size(F.split("text", " ")).cast("bigint").alias("n_tokens")
@@ -275,7 +270,6 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only over the training side."""
     from test_dataengineer2026_spark.functions.text import shingles, tokens
 
-    apply_runtime_confs(spark)
     d = tables.widen_if_narrow(tables.load(spark, sf_dir, "documents"), "doc_id")
 
     def posting(df: DataFrame) -> DataFrame:
@@ -328,7 +322,6 @@ def quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on lang; at 100 TB with huge strata the same quota comes
     from a rank-free two-pass instead (per-partition top-k heaps, then
     merge), which is O3's TakeOrderedAndProject pattern per stratum."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     rn = F.row_number().over(
         W.partitionBy("lang").orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
@@ -367,7 +360,6 @@ def length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-memory). Both engines interpolate at rank (n-1)*p; results
     are rounded to 6 decimals to absorb libm/order-of-operations ulps,
     the T5 convention."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     t = d.select(
         "source", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
@@ -418,7 +410,6 @@ def shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     a partitioned sink: one exchange, no global sort, each shard file
     written independently — and an incremental append lands new docs in
     their stable shards without reshuffling history."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     h = F.md5(F.col("doc_id").cast("string"))
     shard = F.conv(F.substring(h, 1, 12), 16, 10).cast("long") % N_SHARDS
@@ -462,7 +453,6 @@ def boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     back onto the paragraph stream."""
     from test_dataengineer2026_spark.queries.dedup import _spark_paras
 
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     paras = _spark_paras(d)
     dfreq = paras.groupBy("para_hash").agg(
@@ -528,7 +518,6 @@ def temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan speed (int64 products bounded: h16 < 2^16, Z <= #langs * 1e6,
     so the LHS stays under 2^63 up to ~1e8 docs per language; shard the
     gate by a wider T scale past that)."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     s = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_l"))
     tot = s.agg(F.sum("n_l").alias("n"))
@@ -640,7 +629,6 @@ def leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cost over plain D6: one extra aggregation — nothing new shuffles at
     100 TB.
     """
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     pairs = DD.neardup_pairs_inverted(
         d, "text", "doc_id", n=3, threshold=0.8
@@ -709,7 +697,6 @@ def curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash exchange on phase, the same bounded-exchange shape as C9's
     shard shuffle. Fixed edges (not quantiles) keep assignment
     deterministic under any partitioning."""
-    apply_runtime_confs(spark)
     from pyspark.sql import Window as W
 
     d = tables.load(spark, sf_dir, "documents")
@@ -764,7 +751,6 @@ def domain_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     window: ONE hash exchange on domain, per-domain local sort bounded
     by domain size. Skewed megadomains at 100 TB would pre-aggregate a
     count and short-circuit (cap << count) before the window."""
-    apply_runtime_confs(spark)
     from pyspark.sql import Window as W
 
     d = tables.load(spark, sf_dir, "documents")

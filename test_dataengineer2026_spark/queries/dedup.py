@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.operators import dedup as D
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 # Shared oracle CTE: distinct 3-gram shingle sets per doc.
 _SETS_CTE = """
@@ -55,7 +54,6 @@ GROUP BY md5(text)
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1: exact dedup via content digest groupBy — digest computed
     map-side so document text never shuffles; keeper = min doc_id."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     return D.exact_dedup_groups(d, "text", "doc_id")
 
@@ -94,7 +92,6 @@ def minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D2: MinHash(k=16) + LSH(4 bands x 4 rows) near-dup pairs, verified
     with exact Jaccard >= 0.8. Signature cost O(k) per doc; banding makes
     candidate generation an equi-join instead of all-pairs."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     return D.neardup_pairs_minhash(d, "text", "doc_id", n=3, threshold=0.8)
 
@@ -127,7 +124,6 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline that D2 approximates; D3b runs the same pipeline with the
     document-frequency cap active — the knob that bounds the join
     fan-out at scale."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     return D.neardup_pairs_inverted(d, "text", "doc_id", n=3, threshold=0.8)
 
@@ -180,7 +176,6 @@ def ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     build side, and the `kept` list is a semi-join the optimizer can
     turn into a bloom-pruned scan. At 100 TB this is the ONLY version
     of D3 you would run."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     return D.neardup_pairs_inverted(
         d, "text", "doc_id", n=3, threshold=0.8, df_cap=D.DF_CAP
@@ -230,7 +225,6 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D4: SimHash near-dup pairs — 24-bit fingerprints, 4x6-bit band LSH
     (pigeonhole: Hamming <= 3 implies a shared band), verified with
     bit_count(xor)."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     out = D.neardup_pairs_simhash(d, "text", "doc_id", max_hamming=3)
     return out.select("doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming"))
@@ -268,7 +262,6 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass), which the single deterministic step here stands in for."""
     from test_dataengineer2026_spark.operators import similarity as SIM
 
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "embeddings")
     pairs = SIM.srp_neighbor_pairs(e, threshold=0.45)
     sym = pairs.select(
@@ -332,7 +325,6 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark iterates a join+groupBy per round (rounds = graph diameter,
     2-3 for near-dup cliques), the GraphFrames-style CC loop that runs
     unchanged on a 1000-executor cluster."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     pairs = D.neardup_pairs_inverted(d, "text", "doc_id", n=3, threshold=0.8).select(
         "doc_a", "doc_b"
@@ -386,7 +378,6 @@ def containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     which symmetric Jaccard under-scores when lengths differ). Identical
     scale shape to D2: signatures O(k) per doc, candidates via band
     equi-join, exact set math only on the candidate pairs."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     sets = D.shingle_sets(tables.widen_if_narrow(d, "doc_id"), "text", "doc_id").cache()
     banded = D.band_table(D.minhash_signature(sets)).cache()
@@ -468,7 +459,6 @@ def paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the text stays at its source partition."""
     from pyspark.sql import Window as W
 
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     paras = _spark_paras(d).drop("para_text")
     w = W.partitionBy("para_hash")
@@ -543,7 +533,6 @@ def canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits exactly one is_kept=true row, so downstream filtering is a
     codegen predicate, not a join back to a keeper table.
     """
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     pairs = D.neardup_pairs_inverted(
         d, "text", "doc_id", n=3, threshold=0.8
@@ -625,7 +614,6 @@ def substring_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     df-cap is computed with one map-side-combined count, and no
     document text ever reaches the pair join (hashes only).
     """
-    apply_runtime_confs(spark)
     # Widen the scan before the per-window md5 pass (r19, guide §2.5 —
     # the T6/D2 pattern): the single-file fixture feeds ONE task, and
     # the span-hash pipeline is additionally evaluated TWICE (df-cap

@@ -16,7 +16,6 @@ from pyspark.sql import types as T
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.determinism import MONEY2, dsum, sql_dsum
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 
 @register(
@@ -37,7 +36,6 @@ def json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9: JSON path extraction + validity + typed parse of events.props
     ({"k": <int>}), via get_json_object and from_json with a declared
     schema — never schema inference in the hot path."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     parsed = F.from_json(
         "props", T.StructType([T.StructField("k", T.LongType())])
@@ -70,7 +68,6 @@ def json_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9b: aggregate over JSON-extracted fields per event type — the
     parse happens once in a projected column, then ordinary JVM-side
     aggregation (no per-row Python)."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     return (
@@ -98,7 +95,6 @@ FROM nation
 )
 def to_json_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9c: emit JSON rows (the spec's JSON output format, TEST.md:59)."""
-    apply_runtime_confs(spark)
     n = tables.load(spark, sf_dir, "nation")
     return n.select(
         "n_nationkey",
@@ -147,7 +143,6 @@ def variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the VARIANT round-trip preserved every value exactly.
     Missing paths surface as NULL (absent stays NULL in both engines).
     """
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     # Per-(sf_dir, pid) staging with dead/stale-sibling pruning and an
     # atexit reaper — see test_dataengineer2026_spark/staging.py for the
@@ -212,7 +207,6 @@ def batch_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     are pruned at the scan."""
     from pyspark.sql import Window as W
 
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     wo = W.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(wo)
@@ -284,7 +278,6 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     less, and the final 3-row report is a broadcast of three scalar
     counts. Conversion ratios are count/count doubles — deterministic.
     """
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type"
     )
@@ -364,7 +357,6 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses to |users| x |active days| before anything else touches
     it.
     """
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     activity = e.select(
         "user_id", F.date_trunc("day", F.col("ts")).cast("date").alias("day")
@@ -422,7 +414,6 @@ def event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort within the user partition; the trigram count is a two-phase
     aggregate and the top-20 runs as TakeOrderedAndProject with full
     column tiebreaks — no global sort of the path table."""
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     e = tables.load(spark, sf_dir, "events").select(
@@ -472,7 +463,6 @@ def first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB both sides co-partition on user once and fan-out is bounded
     by events-per-user-per-week; the argmin over (ts, event_id) is a
     min over a struct — total order, engine-identical under ties."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
@@ -538,7 +528,6 @@ def markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     a map-side-combinable count into O(types^2) rows; the row-normalize
     window runs over those ~25 rows, not the data. At 100 TB the whole
     matrix still fits in a broadcast."""
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     e = tables.load(spark, sf_dir, "events")

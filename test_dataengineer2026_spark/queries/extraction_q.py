@@ -19,7 +19,6 @@ from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.extraction import extract as X
 from test_dataengineer2026_spark.extraction import pdf as P
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 CORPUS: list[tuple[str, str]] = [
     (
@@ -86,7 +85,6 @@ FROM {_corpus_values()}
 def extract_metadata_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3: project metadata extraction (TEST.md:32-36) — same extractor
     the PDF pipeline uses, over the synthetic corpus."""
-    apply_runtime_confs(spark)
     return X.extract_metadata(_corpus_df(spark))
 
 
@@ -103,7 +101,6 @@ def llm_extract_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     model would, so this query shares X3's oracle: matching it proves
     the LLM path is value-equivalent to the regex path on the corpus —
     the spec's own cross-validation suggestion (TEST.md:97)."""
-    apply_runtime_confs(spark)
     from test_dataengineer2026_spark.extraction.llm import llm_extract_metadata
 
     return llm_extract_metadata(_corpus_df(spark), batch_size=2)
@@ -158,7 +155,6 @@ WHERE regexp_extract(row, '^({fam_alt})', 1) <> ''
 def extract_resources_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4+X7: resource-table rows with unit capture and numeric
     normalization (TEST.md:38-42)."""
-    apply_runtime_confs(spark)
     return X.extract_resources(_corpus_df(spark))
 
 
@@ -171,7 +167,6 @@ def extract_reserves_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5: reserve-table rows (Proven/Probable + rollup, TEST.md:44-48)
     — doc_crest's kt-unit table including the 'Proven + Probable'
     subtotal row the sample PDF also carries."""
-    apply_runtime_confs(spark)
     return X.extract_reserves(_corpus_df(spark))
 
 
@@ -189,7 +184,6 @@ def pdf_extract_text_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     report goes through the same pages_udf in tests/test_extraction.py;
     both paths are Arrow-batched Pandas UDFs, so 10k PDFs parallelize
     across executors with no driver involvement."""
-    apply_runtime_confs(spark)
     d = tables.widen_if_narrow(tables.load(spark, sf_dir, "documents"), "doc_id")
     pdfs = d.select("doc_id", P.render_pdf_udf("text").alias("content"))
     pages = pdfs.select("doc_id", F.explode(P.pages_udf("content")).alias("pg"))
@@ -226,7 +220,6 @@ def extract_table_cells_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2: raw table-cell recovery (category + three numeric cells per
     row, untyped) from the text layer — the structure-location step that
     X4/X5 then type and filter (TEST.md:83)."""
-    apply_runtime_confs(spark)
     return X.extract_table_cells(_corpus_df(spark))
 
 
@@ -251,7 +244,6 @@ def positional_cells_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     or reading order — the Tabula-class capability TEST.md:83 asks for.
     One Arrow-batched applyInPandas per doc group; at corpus scale this
     parallelizes per document exactly like X1."""
-    apply_runtime_confs(spark)
     import pandas as pd
 
     cells = X.extract_table_cells(_corpus_df(spark))
@@ -296,7 +288,6 @@ def null_fill_contract_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X8: the spec's null contract (TEST.md:30) — every sentinel
     spelling of 'missing' becomes true NULL and the row is KEPT (no
     dropped rows, partial extraction preserved)."""
-    apply_runtime_confs(spark)
     df = spark.createDataFrame(
         [("",), ("N/A",), ("n/a",), ("-",), ("--",), ("NA",), (" 42 ",), ("ok",), (None,)],
         "raw string",
@@ -323,7 +314,6 @@ def validate_extraction_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness, TEST.md:161 error handling) — the corpus plants a
     zero-tonnes row (doc_mineros 'Indicated 0') that must land in
     quarantine with its reason while every other row passes."""
-    apply_runtime_confs(spark)
     corpus = _corpus_df(spark)
     rows = X.extract_resources(corpus).unionByName(X.extract_reserves(corpus))
     clean, quarantine = X.validate_split(rows)
@@ -349,7 +339,6 @@ FROM {_corpus_values()}
 def extract_economics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X6+X8: economics with the null contract — doc_crest has no
     figures at all and keeps a full-null row (TEST.md:30)."""
-    apply_runtime_confs(spark)
     return X.extract_economics(_corpus_df(spark))
 
 
@@ -365,7 +354,6 @@ FROM (VALUES ('1,515'), ('US$1,850'), ('14.31'), ('2,017.5'), ('n/a'), ('')) AS 
 def normalize_numeric_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7: formatted-numeric normalization — the sample PDF's exact
     string shapes ('1,515', 'US$1,850'); junk -> null, never an error."""
-    apply_runtime_confs(spark)
     df = spark.createDataFrame(
         [("1,515",), ("US$1,850",), ("14.31",), ("2,017.5",), ("n/a",), ("",)],
         "raw string",
@@ -423,7 +411,6 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-block fuzzy verify (D3's Jaccard machinery) only ever sees
     same-key candidates.
     """
-    apply_runtime_confs(spark)
     p = tables.load(spark, sf_dir, "part")
     toks = F.split("p_name", " ")
     raw = (
@@ -480,7 +467,6 @@ def text_layer_check_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     previously produced empty pages with no signal). Page counting and
     char totals run over the extractor's own output via higher-order
     array functions — no second Python crossing after pages_udf."""
-    apply_runtime_confs(spark)
     d = tables.widen_if_narrow(tables.load(spark, sf_dir, "documents"), "doc_id")
     content = F.when(
         F.col("doc_id") % 7 == 0, P.render_scanned_pdf_udf("text")
@@ -538,7 +524,6 @@ def reserves_economics_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics — the report shows what is missing instead of dropping it.
     At corpus scale both sides are per-doc aggregates joined on the doc
     key — one co-partitioned join after two narrow extractions."""
-    apply_runtime_confs(spark)
     corpus = _corpus_df(spark)
     rsv = X.extract_reserves(corpus)
     eco = X.extract_economics(corpus).select("doc_id", "capex", "npv")

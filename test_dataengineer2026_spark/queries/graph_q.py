@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.lineage import release_checkpoint
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 #: rank quantum: 1.0 == 1_000_000 micro-units
 PR_SCALE = 1_000_000
@@ -86,7 +85,6 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the integer-arithmetic determinism contract. Edges and degrees are
     computed once and cached for the five consumers; every round's only
     driver involvement is assembling the next plan (no collect)."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = tables.load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     pairs = (
@@ -190,7 +188,6 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode each triangle to its three corners and aggregate; integer
     counts — engine-identical by construction.
     """
-    apply_runtime_confs(spark)
     from test_dataengineer2026_spark.operators.graph import (
         degree_table,
         orient_by_degree,
@@ -290,7 +287,6 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation over the label table. Pointer doubling converges in
     O(log diameter) rounds of key-partitioned joins — the 100 TB story
     is unchanged from D6."""
-    apply_runtime_confs(spark)
     from test_dataengineer2026_spark.operators.dedup import connected_components
 
     li = tables.load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -367,7 +363,6 @@ def bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     key) plus a min-aggregation — shuffle O(edges) per round, rounds
     fixed; level state is O(nodes). Unreachable nodes never enter the
     result, exactly like the oracle."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = tables.load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     pairs = (

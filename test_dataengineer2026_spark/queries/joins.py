@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.determinism import MONEY2, dsum, sql_dsum
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 
 @register(
@@ -43,7 +42,6 @@ GROUP BY o.o_orderpriority
 def inner_equi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: fact-to-fact equi join; Catalyst picks the physical strategy
     (sort-merge at scale, broadcast if one side fits)."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     o = tables.load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return (
@@ -70,7 +68,6 @@ GROUP BY c.c_custkey
 def left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: keep left rows without matches (projects lacking economics,
     TEST.md:30) — customers with zero orders appear with n_orders=0."""
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer")
     o = tables.load(spark, sf_dir, "orders")
     return (
@@ -95,7 +92,6 @@ GROUP BY n.n_name
 )
 def right_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: right outer — every nation appears even with no suppliers."""
-    apply_runtime_confs(spark)
     s = tables.load(spark, sf_dir, "supplier")
     n = tables.load(spark, sf_dir, "nation")
     return (
@@ -125,7 +121,6 @@ FROM cust c FULL OUTER JOIN supp s ON c.nationkey = s.nationkey
 def full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4: reconcile two aggregates keeping keys present in either side
     (reconciliation across extraction runs, TEST.md:161)."""
-    apply_runtime_confs(spark)
     c = (
         tables.load(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nationkey"))
@@ -161,7 +156,6 @@ WHERE EXISTS (
 def left_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5: EXISTS — customers having at least one large order; only the
     join key of the right side travels."""
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer")
     o = tables.load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000.0)
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
@@ -192,7 +186,6 @@ def left_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-producing path was never value-checked. The filter is pushed into
     the build-side scan before the anti-join, so only qualifying order
     keys travel."""
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer")
     o = tables.load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000.0)
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
@@ -216,7 +209,6 @@ GROUP BY r.r_name
 def broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7: dim-chain join with explicit broadcast hints — zero shuffle of
     the fact table; the only exchange is the final tiny aggregation."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     s = tables.load(spark, sf_dir, "supplier")
     n = tables.load(spark, sf_dir, "nation")
@@ -249,7 +241,6 @@ def theta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J8: mixed equi + inequality predicate join. The equi part keys the
     shuffle; the theta predicate filters within matched buckets, so this
     stays a hash/sort-merge join, not a nested-loop."""
-    apply_runtime_confs(spark)
     s = tables.load(spark, sf_dir, "supplier")
     c = tables.load(spark, sf_dir, "customer")
     n = tables.load(spark, sf_dir, "nation")
@@ -277,7 +268,6 @@ def cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J11: Cartesian product (the building block under similarity search
     J12) — kept to provably tiny inputs; at scale the cross join must
     always be blocked/bucketed (see similarity.py)."""
-    apply_runtime_confs(spark)
     r = tables.load(spark, sf_dir, "region").select("r_name")
     t = tables.load(spark, sf_dir, "lineitem").select("l_linestatus").distinct()
     return r.crossJoin(t)
@@ -296,7 +286,6 @@ JOIN supplier s2
 def self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J13: self-join with ordered-pair dedup (a.id < b.id) — the pair
     enumeration pattern under near-duplicate detection (dedup.py)."""
-    apply_runtime_confs(spark)
     s = tables.load(spark, sf_dir, "supplier")
     a = s.alias("a")
     b = s.alias("b")
@@ -338,7 +327,6 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     heavy-hitter-targeted variant bounds the dim explosion to detected
     hot keys — the production shape when the dim is itself large.
     """
-    apply_runtime_confs(spark)
     SALT = 8
     li = tables.load(spark, sf_dir, "lineitem").withColumn(
         "salt",
@@ -392,7 +380,6 @@ def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_probe,
     )
 
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     urgent = tables.load(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
@@ -434,7 +421,6 @@ def null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a nested-loop over the NULL partition; the NULL group rides
     ONE hash bucket, which is the thing to watch for skew at 100 TB
     (a mostly-null key column wants X11's route-around instead)."""
-    apply_runtime_confs(spark)
     s = tables.load(spark, sf_dir, "supplier").select(
         "s_suppkey",
         F.nullif(F.col("s_nationkey") % 5, F.lit(0)).alias("grp"),
@@ -478,6 +464,5 @@ def null_aware_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     with >400k orders); a data-sized NOT IN should be rewritten to
     NOT EXISTS (null-naive, shuffle-able) by the query author — the
     two-query pair J6/J18 documents that tradeoff."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_J18)

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.determinism import dnarrow
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 #: Exact types: quantity is 2dp <= 50; price is 2dp <= ~1e5, so price in
 #: K-units carries 5 exact fractional digits.
@@ -116,7 +115,6 @@ def ols_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form solve runs on the driver-free 1-row result. Also
     returns sx/sy so the oracle pins the exact decimal sums, not just
     the solved coefficients."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return _solve(li.agg(*_suffstats()), keep=("sx", "sy"))
 
@@ -139,7 +137,6 @@ def grouped_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     per group, and every group's solve is a scalar projection. This is
     the pattern for fitting millions of per-key models (per-document,
     per-domain, per-user) without a UDF or a driver loop."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return _solve(li.groupBy("l_returnflag").agg(*_suffstats()))
 
@@ -206,7 +203,6 @@ def knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from test_dataengineer2026_spark.operators import similarity as S
 
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "embeddings")
     test = e.filter(F.col("vec_id") % 10 == 0)
     train = e.filter(F.col("vec_id") % 10 != 0)
@@ -329,7 +325,6 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     the update is one partial-agg shuffle keyed on (cluster, dim) —
     integer sums partial-aggregate exactly.
     """
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
@@ -452,7 +447,6 @@ def perceptron(spark: SparkSession, sf_dir: str) -> DataFrame:
     and sums updates over the misclassified set. At 100 TB an epoch
     costs exactly one map-side-combined aggregation — the textbook
     in-database learner."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     x = li.select(
         F.when(F.col("l_returnflag") == "R", 1).otherwise(-1).alias("y"),

@@ -18,7 +18,6 @@ from test_dataengineer2026_spark.multimodal.binary_ops import (
     synthesize_wav,
 )
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 
 @register(
@@ -48,7 +47,6 @@ def mm_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     first_byte (oracle: first codepoint; DuckDB cannot slice blobs) —
     equal only while the corpus is ASCII, which
     tests/test_parity.py::test_fixture_text_is_ascii pins loudly."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     return extract_features(attach_binary(d))
 
@@ -77,7 +75,6 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     char-based rather than mixing a byte count with char slices —
     equal only while the corpus is ASCII, which
     tests/test_parity.py::test_fixture_text_is_ascii pins loudly."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     return sample_frames(attach_binary(d), frame_size=100, max_frames=3)
 
@@ -122,7 +119,6 @@ def mm_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     bug that survives the comparison. Both sides are mapInPandas over
     Arrow batches: at 100 TB the decode runs decoder-parallel on
     executors, one Python crossing per batch, nothing on the driver."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     return decode_png_features(synthesize_png(d))
 
@@ -162,7 +158,6 @@ def mm_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     generate_series — encoder and decoder cannot share a compensating
     bug that survives. mapInPandas both ways: executor-parallel,
     Arrow-batched, nothing on the driver."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     return decode_wav_features(synthesize_wav(d))
 
@@ -194,12 +189,13 @@ def mm_modality_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     'unknown' partition instead of failing the job. Payload magics here
     are synthesized deterministically (doc_id mod 3) since the corpus is
     text; the sniffing and routing plumbing is the real thing."""
+    import os
+
     import pyspark.sql.functions as F
 
-    from test_dataengineer2026_spark.queries.sources_q import _stage
     from test_dataengineer2026_spark.sources import io as sio
+    from test_dataengineer2026_spark.staging import staged_dir
 
-    apply_runtime_confs(spark)
     d = attach_binary(tables.load(spark, sf_dir, "documents"))
     magic = (
         F.when(F.col("doc_id") % 3 == 0, F.lit(bytes([0xFF, 0xD8, 0xFF])))
@@ -219,7 +215,7 @@ def mm_modality_router(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("unknown"))
         .alias("modality"),
     )
-    out = _stage("modality_store", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "modality_store")
     sio.sink_parquet(sniffed, out, partition_by=["modality"])
     # writer-side schema so an empty corpus routes to an empty frame
     # instead of an UNABLE_TO_INFER_SCHEMA crash (see scan_parquet)
@@ -276,7 +272,6 @@ def mm_perceptual_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces pairwise image comparison at 100 TB (same banding
     discipline as D2/D5). Map-only plan: synthesize -> decode+hash,
     zero exchanges."""
-    apply_runtime_confs(spark)
     from test_dataengineer2026_spark.multimodal.binary_ops import (
         decode_png_ahash,
     )
@@ -321,7 +316,6 @@ def mm_audio_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the closed form and re-derives both features relationally, so
     decoder AND featurizer verify bit-for-bit. Map-only plan: zero
     exchanges; at 100 TB this runs decoder-parallel on executors."""
-    apply_runtime_confs(spark)
     from test_dataengineer2026_spark.multimodal.binary_ops import (
         decode_wav_frame_features,
     )
@@ -404,7 +398,6 @@ def mm_image_neardup_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     and full images never reach the join (64-bit hashes only).
     Decode+hash runs once, map-only, in Arrow-batched mapInPandas.
     """
-    apply_runtime_confs(spark)
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     from test_dataengineer2026_spark.multimodal.binary_ops import (  # noqa: PLC0415
@@ -478,7 +471,6 @@ def mm_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as a first-class relational output: quarantined rows
     stay in-band, filterable, countable, and re-processable — a
     corrupt shard costs its rows, never the job."""
-    apply_runtime_confs(spark)
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     from test_dataengineer2026_spark.multimodal.binary_ops import (  # noqa: PLC0415

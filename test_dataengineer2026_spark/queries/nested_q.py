@@ -40,16 +40,8 @@ from pyspark.sql import functions as F
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.determinism import davg, dsum, sql_davg, sql_dsum
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 from test_dataengineer2026_spark.sources import io as sio
-from test_dataengineer2026_spark.staging import stage_tag
-
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_OUT_ROOT = os.path.join(_REPO_ROOT, ".tmp", "nested_stage")
-
-
-def _stage(name: str, sf_dir: str) -> str:
-    return os.path.join(_OUT_ROOT, stage_tag(sf_dir), name)
+from test_dataengineer2026_spark.staging import staged_dir
 
 
 @register(
@@ -71,9 +63,8 @@ def nested_struct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     totalprice predicate pushes down to the leaf column's row-group
     stats, so at 100 TB the struct wrapper costs nothing over flat
     columns (plan contract: tests/test_plans.py)."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
-    out = _stage("orders_struct", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "orders_struct")
     staged = o.select(
         "o_orderkey",
         F.struct("o_orderstatus", "o_totalprice", "o_orderdate").alias(
@@ -128,9 +119,8 @@ def nested_list_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregated by list size. first_item_qty is deliberately
     ORDER-SENSITIVE through the roundtrip: it only matches the oracle if
     parquet preserved list element order exactly."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
-    out = _stage("lineitem_list", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "lineitem_list")
     packed = li.groupBy("l_orderkey").agg(
         F.sort_array(
             F.collect_list(
@@ -176,9 +166,8 @@ def nested_map_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     group. Values come back through element_at by KEY — never map
     iteration order, which parquet does not promise to preserve — and
     the aggregate must reproduce the flat columns' exact sums."""
-    apply_runtime_confs(spark)
     p = tables.load(spark, sf_dir, "part")
-    out = _stage("part_map", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "part_map")
     staged = p.select(
         "p_partkey",
         "p_brand",
@@ -249,9 +238,8 @@ def nested_map_of_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels — it only matches the oracle if parquet preserved each
     inner list's element order exactly.
     """
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
-    out = _stage("lineitem_map_of_lists", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "lineitem_map_of_lists")
     packed = li.groupBy("l_orderkey").agg(
         F.sort_array(
             F.collect_list(
@@ -362,9 +350,8 @@ def nested_list_of_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan stage, shuffle-free) and first_first_qty only matches the
     oracle if parquet preserved BOTH nesting levels' element order.
     """
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
-    out = _stage("lineitem_list_of_lists", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "lineitem_list_of_lists")
     packed = li.groupBy("l_orderkey").agg(
         F.sort_array(
             F.collect_list(
@@ -447,9 +434,8 @@ def nested_struct_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
     without them every leaf of the widest struct would be read for any
     access, which is the failure mode this exhibit pins against.
     """
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
-    out = _stage("orders_struct3", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "orders_struct3")
     staged = o.select(
         "o_orderkey",
         F.struct(

@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 
 @register(
@@ -36,7 +35,6 @@ FROM part
 )
 def project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1: column selection / renaming / derivation (column-pruned scan)."""
-    apply_runtime_confs(spark)
     p = tables.load(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -59,7 +57,6 @@ WHERE (l_quantity > 30.0 AND l_returnflag IN ('A', 'R'))
 )
 def filter_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2: compound boolean predicates, pushed to the parquet scan."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     cond = (
         (F.col("l_quantity") > 30.0) & F.col("l_returnflag").isin("A", "R")
@@ -85,7 +82,6 @@ WHERE NULLIF(o_orderstatus, 'P') IS NULL OR o_orderstatus = 'F'
 def filter_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3: IS NULL / null-safe equality — the spec's null contract
     (TEST.md:30: missing values stay null, rows are kept)."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     status_or_null = F.nullif(F.col("o_orderstatus"), F.lit("P"))
     always_null = F.nullif(F.col("o_orderpriority"), F.col("o_orderpriority"))
@@ -113,7 +109,6 @@ WHERE c_name LIKE 'Customer#%19%'
 )
 def filter_like_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4: LIKE / regex / contains / startswith predicates (TEST.md:82)."""
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer")
     return c.filter(
         F.col("c_name").like("Customer#%19%")
@@ -137,6 +132,5 @@ def distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: partial (map-side) distinct runs before the exchange, so
     shuffle volume is O(distinct), not O(rows).
     """
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer")
     return c.select("c_nationkey", "c_mktsegment").distinct()

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 
 @register(
@@ -83,7 +82,6 @@ def expectation_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the number of constraints (tests/test_plans.py pins the one-scan
     shape). Metrics are exact-count ratios — cross-engine safe.
     """
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     m = o.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -187,7 +185,6 @@ def referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE broadcasts it; a violating ingest shows up as n_orphans > 0
     without ever collecting the violations.
     """
-    apply_runtime_confs(spark)
     dfs = {
         n: tables.load(spark, sf_dir, n)
         for n in ("orders", "customer", "lineitem", "part", "supplier")
@@ -232,7 +229,6 @@ def financial_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     never move unaggregated, and the 3-row report is what a monitor
     alerts on. Exact-decimal sums on both sides keep the 5% boundary
     decision engine-identical."""
-    apply_runtime_confs(spark)
     from test_dataengineer2026_spark.determinism import dsum
 
     o = tables.load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
@@ -299,7 +295,6 @@ def observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a separate DQ job doubles the read bill). Restriction honored:
     observed expressions are plain aggregates (no distinct), exactly
     what the API supports."""
-    apply_runtime_confs(spark)
     from pyspark.sql import Observation
 
     li = tables.load(spark, sf_dir, "lineitem")

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 
 @register(
@@ -45,7 +44,6 @@ FROM customer
 def string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1: case-fold / trim / split / substring / concat / levenshtein —
     company-name matching across reports (TEST.md:32-36)."""
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
@@ -87,7 +85,6 @@ def regex_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     digits), and ``is_cheap_line`` yields a mixed true/false column.
     Round 9's judge found the previous ``p_name rlike '[0-9]'`` filter was
     vacuous (0 rows at every fixture scale)."""
-    apply_runtime_confs(spark)
     p = tables.load(spark, sf_dir, "part")
     return p.filter(F.col("p_brand").rlike("[0-9]")).select(
         "p_partkey",
@@ -120,7 +117,6 @@ WHERE year(o_orderdate) = 1997
 def datetime_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3: parse/truncate/diff date-time — the spec's report_date handling
     ("September 30, 2023" -> DATE, TEST.md:36) plus calendar arithmetic."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     return o.filter(F.year("o_orderdate") == 1997).select(
         "o_orderkey",
@@ -164,7 +160,6 @@ def math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     repo:FIXTURES.md §2). Each output is a single fp op on identical
     inputs, hence bit-stable across engines; round() is integer-rounding
     (half-away-from-zero on both)."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return li.filter((F.col("l_linenumber") == 1) & (F.col("l_returnflag") == "A")).select(
         "l_orderkey",
@@ -200,7 +195,6 @@ FROM orders
 def conditional_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5: CASE WHEN / coalesce / nullif — category normalization and the
     null contract (TEST.md:30)."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -241,7 +235,6 @@ def cast_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "1,515" tonnes and "US$1,850" price strings (repo:FIXTURES.md §3,
     X7 normalize_numeric) via regexp cleanup + cast; try_cast yields null
     on junk instead of failing the row (TEST.md:30)."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     return o.filter(F.col("o_orderstatus") == "P").select(
         "o_orderkey",
@@ -277,7 +270,6 @@ def array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F7: array ops over tokenized documents — the per-doc page/cell
     array model (SURVEY §1.1): size/contains/distinct/sort/transform/
     filter/aggregate (higher-order functions, all JVM-side)."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     tok = F.split("text", " ")
     return d.select(
@@ -312,7 +304,6 @@ def map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F8: MapType lookup columns — the unit-conversion-table shape (X7:
     {'Mt': 1e6, 'kt': 1e3}); built with create_map + element_at on the
     Spark side, CASE decode in the oracle."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     status_map = F.create_map(
         F.lit("F"), F.lit("final"), F.lit("O"), F.lit("open")
@@ -345,7 +336,6 @@ def hash_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F11: stable content hashes — doc_id = hash(bytes) is the dedup
     join key (repo:BASELINE.json:6); md5/sha256 are identical algorithms
     on both engines so they stay oracle-checkable."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -384,7 +374,6 @@ def url_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus carries no real ones; the parsing path is the real
     surface. The oracle reconstructs each component by string algebra —
     parse_url must agree with it exactly."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("https://"),
@@ -448,7 +437,6 @@ def nested_struct_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the denormalize-once pattern (one shuffle builds the nested column,
     every downstream per-parent question becomes a map-side HOF instead
     of a repeated child-table join)."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     item = F.struct(
         F.col("l_linenumber").alias("ln"),
@@ -518,7 +506,6 @@ def try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate pushes to the scan. try_* is strictly cheaper than the
     ANSI-throw path at scale because a poisoned row yields a NULL to
     filter, not a task failure to retry."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return li.filter(F.col("l_orderkey") < 40).select(
         "l_orderkey",

@@ -16,7 +16,6 @@ from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.functions.vector import cosine, dot, l2_norm
 from test_dataengineer2026_spark.operators import similarity as S
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 
 def _sql_dot(a: str, b: str, dim: int = 64) -> str:
@@ -49,7 +48,6 @@ FROM embeddings
 def vector_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F10: norms / elementwise access over ARRAY<FLOAT> — zip_with +
     aggregate fold, fully JVM-side."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "embeddings")
     emb = F.col("embedding")
     return e.select(
@@ -86,7 +84,6 @@ def similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J12: brute-force cosine top-10 per query vector — the exact
     baseline: broadcast the (small) query side, stream the corpus, no
     corpus shuffle; rank on rounded cosine with id tiebreak."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "embeddings")
     return S.cosine_topk(e.filter(F.col("vec_id") < 5), e, k=10)
 
@@ -148,7 +145,6 @@ def srp_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the bucketed self-join replaces the O(n^2) cross join with
     a shuffle on (table_idx, bucket); recall tunes via (tables, bits).
     """
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "embeddings")
     return S.srp_neighbor_pairs(e, threshold=0.4)
 
@@ -196,7 +192,6 @@ def ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is stored partitionBy(cell), so a probe scans probes/n_cells
     of the data; recall tunes via the probe count. Complements J12b's
     LSH with the partition-pruning flavor of ANN."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "embeddings")
     seeds = e.filter(F.col("vec_id") < S.IVF_SEEDS)
     queries = e.filter(F.col("vec_id") < 5)
@@ -284,7 +279,6 @@ def ivf_kmeans_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over the corpus, and the corpus is stored partitionBy(cell)
     for probe-pruned scans (recall/probe trade measured in
     tests/test_similarity.py)."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "embeddings")
     seeds = e.filter(F.col("vec_id") < S.IVF_SEEDS)
     queries = e.filter(F.col("vec_id") < 5)
@@ -354,7 +348,6 @@ def pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeping the whole pipeline (encode + score + rank) value-checkable
     against the SQL oracle. Codebooks here are deterministic seed
     slices; kmeans_centroids shows the training recipe."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "embeddings")
     seeds = e.filter(F.col("vec_id") < S.PQ_K)
     queries = e.filter(F.col("vec_id") < 5)
@@ -412,7 +405,6 @@ def pq_rerank_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     read for an exact cosine top-10 (recall@10 0.90 vs 0.34 for raw
     ADC at sf0.001). This is the production PQ deployment shape: code
     scan for candidates, point-lookups into the raw store for quality."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "embeddings")
     seeds = e.filter(F.col("vec_id") < S.PQ_K)
     queries = e.filter(F.col("vec_id") < 5)

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 #: Count-Min geometry: DEPTH independent hash rows x WIDTH counters.
 CM_DEPTH = 4
@@ -94,7 +93,6 @@ def countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     reports for verification. At 100 TB you'd keep ONLY the sketch: the
     grid is the entire reduce-side state, mergeable across any partition
     split (counts are associative)."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem").select("l_partkey")
     rows = F.explode(F.array(*[F.lit(r) for r in range(CM_DEPTH)])).alias("r")
 
@@ -184,7 +182,6 @@ def hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact count. At 100 TB the register file (256 bytes) is the entire
     state — this is approx_count_distinct (A4) with the lid off, and the
     MAX-fold is why it merges across any partitioning for free."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     hashed = li.select(
         _spark_h48(F.col("l_orderkey").cast("string")).alias("h")
@@ -287,7 +284,6 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from test_dataengineer2026_spark.functions.text import tokens
 
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     terms = d.select(F.explode(tokens("text")).alias("term"))
 

@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 
 @register(
@@ -35,7 +34,6 @@ def sort_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1: multi-key global order with explicit null placement; the order
     is materialized into a row_number column so the order-insensitive
     hash still verifies it."""
-    apply_runtime_confs(spark)
     n = tables.load(spark, sf_dir, "nation")
     key_or_null = F.nullif(F.col("n_regionkey"), F.lit(2))
     w = W.orderBy(key_or_null.desc_nulls_last(), F.col("n_name").asc())
@@ -59,7 +57,6 @@ WHERE l_returnflag = 'R'
 def sort_within_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2: partition-local sort — no exchange; produces sorted runs for
     writers (row content is unchanged, which is what the oracle checks)."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_returnflag") == "R")
@@ -82,7 +79,6 @@ def limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O3: top-k without a global sort — Spark plans TakeOrderedAndProject
     (per-partition heaps, merge k at the driver). Unique tiebreaker keeps
     the selected set deterministic."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     return (
         o.select("o_orderkey", "o_totalprice", "o_custkey")
@@ -104,7 +100,6 @@ def union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1: bag union (duplicates kept) — stacking per-document extraction
     outputs into corpus tables (TEST.md:26). unionByName guards against
     positional column mixups."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
     a = o.filter(F.col("o_orderstatus") == "F").select(*cols)
@@ -123,7 +118,6 @@ SELECT s_nationkey AS nationkey FROM supplier
 )
 def union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U2: set union — stack then dedup (one shuffle on the row key)."""
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey")
     )
@@ -145,7 +139,6 @@ SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
 def intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U3: customers appearing in both completed and open order sets —
     the run-stability check (TEST.md:161)."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderstatus") == "F").select(
         F.col("o_custkey").alias("custkey")
@@ -168,7 +161,6 @@ SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
 def except_(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U4: regression diff between runs (TEST.md:161) — customers with
     orders but none open. Spark subtract == SQL EXCEPT (distinct)."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     a = o.select(F.col("o_custkey").alias("custkey"))
     b = o.filter(F.col("o_orderstatus") == "O").select(
@@ -196,7 +188,6 @@ def unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     the table is read ONCE and each row fans out to k metric rows
     map-side, no shuffle, no k scans. Ids cast exactly into the shared
     double value column (< 2^53, lossless)."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events").filter(F.col("event_id") % 7 == 0)
     return e.select(
         "event_id",
@@ -221,7 +212,6 @@ def except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregation counting per-side multiplicities then regenerating
     rows — one shuffle on the key, never a sort or a per-row anti-join
     loop, so 100 TB costs the same as a group-by."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     a = o.select(F.col("o_custkey").alias("custkey"))
     b = o.filter(F.col("o_orderstatus") == "O").select(

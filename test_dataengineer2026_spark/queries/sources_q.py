@@ -1,8 +1,8 @@
 """Source/sink round-trip queries S1-S8 — the write path executes for
-real (repo-local .tmp staging), then the re-read result is verified
-against an oracle over the original table, proving the formats preserve
-values (TEST.md:59 interchange contract). S9/S10 (streaming source /
-foreachBatch sink) live in streaming_q.py."""
+real (into this process's ``staging.staged_dir`` sink stage), then the
+re-read result is verified against an oracle over the original table,
+proving the formats preserve values (TEST.md:59 interchange contract).
+S9/S10 (streaming source / foreachBatch sink) live in streaming_q.py."""
 
 from __future__ import annotations
 
@@ -14,16 +14,8 @@ from pyspark.sql import functions as F
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.determinism import dsum, sql_dsum
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 from test_dataengineer2026_spark.sources import io as sio
-from test_dataengineer2026_spark.staging import stage_tag
-
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_OUT_ROOT = os.path.join(_REPO_ROOT, ".tmp", "sink_stage")
-
-
-def _stage(name: str, sf_dir: str) -> str:
-    return os.path.join(_OUT_ROOT, stage_tag(sf_dir), name)
+from test_dataengineer2026_spark.staging import staged_dir
 
 
 @register(
@@ -39,9 +31,8 @@ def partitioned_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     """S8+S2: write documents partitioned by lang, re-read, aggregate.
     The lang=... directory keys are what downstream partition pruning
     uses; the oracle confirms zero value drift through the sink."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
-    out = _stage("docs_parquet", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "docs_parquet")
     sio.sink_parquet(d, out, partition_by=["lang"])
     # writer-side schema: an empty input writes no data files, and an
     # inferring read of that store would crash instead of returning an
@@ -71,9 +62,8 @@ def binary_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the exact byte count the scan must report. At 10k-PDF scale
     parallelism = file count and only `length`/`path` are read unless
     `content` is referenced (column pruning on the file source)."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
-    out = _stage("docs_text_bin", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "docs_text_bin")
     d.select("text").coalesce(1).write.mode("overwrite").text(out)
     files = sio.scan_binary(spark, out, glob="*.txt")
     return files.agg(
@@ -94,7 +84,6 @@ def parquet_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown — ReadSchema carries only (doc_id, n_chars) and the filter
     lands in PushedFilters, so at 100 TB the scan touches 2 columns and
     skips row groups whose max(n_chars) <= 300."""
-    apply_runtime_confs(spark)
     d = sio.scan_parquet(spark, tables.table_path(sf_dir, "documents"))
     return d.filter(F.col("n_chars") > 300).select("doc_id", "n_chars")
 
@@ -111,9 +100,8 @@ FROM documents
 def text_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5: raw line-oriented text scan (the reference's data/prueba.txt
     shape) — documents staged as text files, re-read one row per line."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
-    out = _stage("docs_text_lines", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "docs_text_lines")
     d.select("text").coalesce(1).write.mode("overwrite").text(out)
     lines = sio.scan_text(spark, out)
     return lines.agg(
@@ -135,11 +123,10 @@ def json_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     written as JSON-lines, re-read with a DECLARED schema (no inference
     pass), aggregated; the oracle proves zero value drift for int64 keys
     and full-precision doubles through the textual format."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    out = _stage("orders_json", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "orders_json")
     sio.sink_json(o, out)
     back = sio.scan_json(
         spark, out, "o_orderkey long, o_orderstatus string, o_totalprice double"
@@ -162,11 +149,10 @@ def csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7: CSV output sink with header — customer written, re-read with
     a declared schema, aggregated per market segment. Doubles survive
     because Spark writes shortest-round-trip decimal strings."""
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    out = _stage("customer_csv", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "customer_csv")
     sio.sink_csv(c, out)
     back = sio.scan_csv(
         spark, out, "c_custkey long, c_mktsegment string, c_acctbal double"
@@ -186,9 +172,8 @@ SELECT r_regionkey, r_name FROM region
 )
 def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7+S3: CSV sink then declared-schema CSV scan (no inference)."""
-    apply_runtime_confs(spark)
     r = tables.load(spark, sf_dir, "region")
-    out = _stage("region_csv", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "region_csv")
     sio.sink_csv(r, out)
     return sio.scan_csv(spark, out, "r_regionkey int, r_name string")
 
@@ -202,9 +187,8 @@ SELECT n_nationkey, n_name, n_regionkey FROM nation
 )
 def json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6+S4: JSON sink then declared-schema JSON scan (TEST.md:59)."""
-    apply_runtime_confs(spark)
     n = tables.load(spark, sf_dir, "nation")
-    out = _stage("nation_json", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "nation_json")
     sio.sink_json(n, out)
     return sio.scan_json(
         spark, out, "n_nationkey int, n_name string, n_regionkey int"
@@ -252,7 +236,6 @@ def bucketed_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     both shuffles (SortMergeJoin over pre-bucketed scans; the agg after
     the join is the query's only exchange). The oracle proves the
     bucketed write/read/join path loses no rows and no values."""
-    apply_runtime_confs(spark)
     write_bucketed_join_tables(spark, sf_dir)
     j = spark.table("s11_lineitem").join(
         spark.table("s11_orders"),
@@ -288,7 +271,6 @@ def dynamic_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is O(late days), not O(history). The re-read equals a full
     recompute (the oracle) precisely because a day's rollup is stale
     iff it contains a late row — the patched set."""
-    apply_runtime_confs(spark)
     ev = tables.load(spark, sf_dir, "events")
     from test_dataengineer2026_spark.determinism import dec, dnarrow
 
@@ -305,7 +287,7 @@ def dynamic_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             dnarrow(F.sum(dec("value"))).alias("total_value"),
         )
 
-    out = _stage("events_daily_backfill", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "events_daily_backfill")
     # pass 1: incomplete feed, full static overwrite of the table
     sio.sink_parquet(rollup(ev.filter(~late)), out, partition_by=["day"])
     # pass 2: recompute only the stale days from the full feed
@@ -354,9 +336,8 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from test_dataengineer2026_spark.operators.zorder import zorder_by
 
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
-    out = _stage("lineitem_zorder", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "lineitem_zorder")
     # min-max scale both keys into the same 10-bit domain before
     # interleaving — otherwise the wider key's high bits dominate and
     # the layout degenerates to a 1-D sort (operators/zorder.py). Bounds
@@ -411,11 +392,11 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffles by key, so it cannot skew; at 100 TB it runs
     per-partition-directory with the same planner math.
     """
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
-    frag = _stage("docs_fragmented", sf_dir)
+    stage = staged_dir(sf_dir, "sink_stage")
+    frag = os.path.join(stage, "docs_fragmented")
     d.repartition(64).write.mode("overwrite").parquet(frag)
-    out = _stage("docs_compacted", sf_dir)
+    out = os.path.join(stage, "docs_compacted")
     sio.compact_parquet(spark, frag, out, target_bytes=8 * 1024 * 1024)
     back = sio.scan_parquet(spark, out)
     return back.groupBy("lang", "source").agg(
@@ -455,9 +436,8 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     production evolving-lake reader declares the current union schema
     (the scan_parquet(schema=...) pattern used by S8/S16/MM3) and gets
     an empty frame instead."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
-    out = _stage("s15_evolving", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "s15_evolving")
     import shutil
 
     shutil.rmtree(out, ignore_errors=True)
@@ -510,9 +490,8 @@ def dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     days and scanning the 10 the dim selects. The oracle recomputes
     the identical join relationally — pruning is an access-path
     optimization, never a semantics change."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
-    out = _stage("s16_events_by_day", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "s16_events_by_day")
     with_day = e.withColumn(
         "day", F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd")
     )
@@ -562,12 +541,11 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary-encoded strings) fails the hash. Like S2, the re-read
     scan keeps pushdown and pruning — ORC carries min/max stripe stats,
     so at 100 TB the format choice changes encoding, not plan shape."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_extendedprice",
         "l_quantity", "l_shipdate",
     )
-    out = _stage("lineitem_orc", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "lineitem_orc")
     sio.sink_orc(li, out)
     back = sio.scan_orc(spark, out)
     return back.groupBy("l_returnflag", "l_linestatus").agg(
@@ -607,11 +585,9 @@ def python_datasource_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the workload (PDF bytes never benefit from codegen) and it
     parallelizes per file exactly like the binaryFile+UDF path.
     """
-    apply_runtime_confs(spark)
     from test_dataengineer2026_spark.sources.pdf_datasource import (
         PdfCorpusDataSource,
     )
-    from test_dataengineer2026_spark.staging import staged_dir
 
     spark.dataSource.register(PdfCorpusDataSource)
     docs = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -656,11 +632,9 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     custom SINK, so this query alone exercises writer + stream-reader
     end-to-end; the oracle over the original documents proves the
     landing->extract round trip byte-exact."""
-    apply_runtime_confs(spark)
     from test_dataengineer2026_spark.sources.pdf_datasource import (
         PdfCorpusDataSource,
     )
-    from test_dataengineer2026_spark.staging import staged_dir
     from test_dataengineer2026_spark.streaming.jobs import run_to_memory
 
     spark.dataSource.register(PdfCorpusDataSource)
@@ -713,12 +687,11 @@ def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from_avro/to_avro raise AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE),
     and installing jars is out of scope here. See USAGE.md.
     """
-    apply_runtime_confs(spark)
     from test_dataengineer2026_spark.extraction import extract as X
     from test_dataengineer2026_spark.queries.extraction_q import _corpus_df
 
     meta = X.extract_metadata(_corpus_df(spark))
-    out = _stage("x3_meta_xml", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "x3_meta_xml")
     sio.sink_xml(meta, out, row_tag="record")
     return sio.scan_xml(spark, out, meta.schema, row_tag="record")
 
@@ -752,14 +725,12 @@ def simple_stream_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     themselves) streams through the partitioned S19 reader; if a
     manifest ever outgrew a driver tail, the upgrade path is the same
     offset algebra on DataSourceStreamReader."""
-    apply_runtime_confs(spark)
     import glob as _glob
     import shutil
 
     from test_dataengineer2026_spark.sources.manifest_source import (
         DocManifestDataSource,
     )
-    from test_dataengineer2026_spark.staging import staged_dir
     from test_dataengineer2026_spark.streaming.jobs import run_to_memory
 
     spark.dataSource.register(DocManifestDataSource)

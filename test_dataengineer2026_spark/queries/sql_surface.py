@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 def _dsum_rev(p: str = "") -> str:
     """Exact-decimal revenue sum (determinism.py convention), with an
@@ -50,7 +49,6 @@ LIMIT 10
 def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL surface: TPC-H-Q3-shaped shipping-priority query via
     spark.sql over registered temp views."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(
         f"""
@@ -93,7 +91,6 @@ WHERE c.c_acctbal > (
 def correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL surface: correlated scalar subquery — Catalyst decorrelates
     this into an aggregate + join (SURVEY §4.2), no per-row re-execution."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(
         f"""
@@ -129,7 +126,6 @@ SELECT * FROM ranked WHERE rk <= 2
 )
 def cte_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL surface: CTE + window + rank filter (top-2 orders per nation)."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL3)
 
@@ -148,7 +144,6 @@ WHERE vec_id < 100
 def sql_udf_registration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V6: a Pandas UDF registered into the SQL function namespace and
     invoked from SQL text."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     from test_dataengineer2026_spark.queries.udf_surface import l2_norm_udf
 
@@ -187,7 +182,6 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     constraint. The optimizer showcase: dims broadcast, region/date
     filters push into the scans, and join order is Catalyst's call, not
     hand-scheduled. Identical SQL text runs on both engines."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL4)
 
@@ -216,7 +210,6 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers by lost revenue. TakeOrderedAndProject caps the sort at
     k=20 per partition, exact decimal revenue keeps the ranking
     engine-identical (unique c_custkey tiebreak)."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL5)
 
@@ -252,7 +245,6 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse). Exact decimal quantity sums keep the HAVING cut and the
     reported sum engine-identical; LIMIT 100 runs as
     TakeOrderedAndProject with the unique o_orderkey tiebreak."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL6)
 
@@ -293,7 +285,6 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan) feeding one global aggregate; both conditional revenue sums
     are exact decimals narrowed once, so the final ratio is bit-equal
     cross-engine."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL7)
 
@@ -329,7 +320,6 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one groupBy(l_partkey) aggregate joined back (exchange reuse,
     no per-row re-scan). Brand/size filters prune the part dim before it
     broadcasts."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL8)
 
@@ -364,7 +354,6 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     to every branch, so the join itself stays a plain broadcast equi-join
     with the disjunction as a residual filter; per-branch part predicates
     still prune the broadcast side."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL9)
 
@@ -403,7 +392,6 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery (computed once, broadcast as a literal-like filter) and a
     NOT EXISTS that plans as a left-anti join on c_custkey (the totalprice
     filter pushes into the orders scan before the anti-join)."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL10)
 
@@ -447,7 +435,6 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL surface: TPC-H Q1 pricing summary as SQL text (A1 is the
     DataFrame twin) — one scan, map-side partial aggregation into 6
     groups, every money sum exact-decimal before the double narrow."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL11)
 
@@ -473,7 +460,6 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries no commit/receipt dates) — the plan shape is the point:
     EXISTS plans as a left-semi join on o_orderkey with the date filter
     pushed below it, never a per-row subquery."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL12)
 
@@ -494,7 +480,6 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL surface: TPC-H Q6 forecasting-revenue-change — a pure
     scan+filter+global-agg with every predicate pushed into the parquet
     scan; the canonical predicate-pushdown exhibit."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL13)
 
@@ -527,7 +512,6 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL surface: TPC-H Q7 volume shipping between two nations — the
     double-nation-join disjunction; both nation dims broadcast and the
     OR stays a residual on the joined row, not a union of two plans."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL14)
 
@@ -562,7 +546,6 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL surface: TPC-H Q8 national market share — an eight-table join
     tree where every dim broadcasts and the share is a conditional-sum
     ratio (exact decimal, narrowed once per side)."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL15)
 
@@ -590,7 +573,6 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema has no partsupp, so profit reduces to discounted revenue
     (no ps_supplycost term) — the five-table join-through-facts shape
     and the nation/year rollup are intact."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL16)
 
@@ -616,7 +598,6 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_shipmode column, so the mode bucket becomes a ship-lag bucket
     (>30 days = SLOW) — the fact-fact join with two conditional counts
     per bucket is the preserved shape."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL17)
 
@@ -641,7 +622,6 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT join with a filter in the JOIN condition (not WHERE: customers
     with zero surviving orders must keep their c_count = 0 row), then a
     two-level aggregation producing the histogram."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL18)
 
@@ -668,7 +648,6 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice (join input and MAX subquery); exchange reuse means lineitem
     aggregates once. Exact-decimal revenue makes the MAX tie-set
     engine-identical."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL19)
 
@@ -689,7 +668,6 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL surface: TPC-H Q16 parts/supplier relationship — partsupp is
     absent, so the supplier set per part comes from shipped lineitem;
     COUNT(DISTINCT) plans as a two-phase partial-distinct aggregate."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL20)
 
@@ -723,7 +701,6 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     dates the lateness is pure shipdate order). Catalyst plans the pair
     as a left-semi then left-anti join on l_orderkey — three passes
     over lineitem, zero correlated re-execution."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL21)
 
@@ -762,7 +739,6 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst decorrelates into a per-part aggregate joined back. The
     double equality is safe because both engines derive the value from
     the identical decimal narrow."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL22)
 
@@ -803,7 +779,6 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst decorrelates the inner scalar subquery into a per-pair
     aggregate joined back, and both IN clauses plan as left-semi
     joins — no per-row re-execution anywhere."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL23)
 
@@ -854,7 +829,6 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     and aggregated ONCE (plan-contract-pinned in tests/test_plans.py)
     — never a rescan per part, never a second pass over the fact
     table."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL24)
 
@@ -875,7 +849,6 @@ def lateral_view_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side fan-out, no join, no shuffle before the aggregation);
     empty tokens from consecutive delimiters are filtered identically
     on both engines."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(
         """
@@ -917,7 +890,6 @@ def recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-feature exhibit for fixed global spines, and the iterative
     set-recursion alternative (where UNION ALL would blow up) lives in
     GR4's manual rounds."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL26)
 
@@ -957,7 +929,6 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar subquery is one tiny aggregate, the final SELECT one
     scan+hash-agg; scripting adds driver-side control flow only, no
     new distributed machinery."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     prev = spark.conf.get("spark.sql.scripting.enabled", None)
     spark.conf.set("spark.sql.scripting.enabled", "true")
@@ -1017,7 +988,6 @@ def execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: EXECUTE IMMEDIATE is pure driver-side resolution —
     the inner statement plans into the ordinary scan + hash aggregate
     it would be if written literally."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     spark.sql("DECLARE OR REPLACE VARIABLE sql29_stmt STRING")
     spark.sql(
@@ -1082,7 +1052,6 @@ def recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint, whose executor-stored blocks die with an executor
     mid-recursion). At 100 TB the anchor/step machinery costs what 5
     rounds of a 25-row join cost: nothing."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     import os
 
@@ -1154,7 +1123,6 @@ def declarative_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     over expressions; the plan is scan → hash agg, pushdown and
     codegen untouched (contrast V1/V6, where the same logic pays the
     Arrow boundary)."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION tok_n(s STRING) "
@@ -1203,7 +1171,6 @@ def pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: zero cost — pipe syntax is parse-level sugar; the
     plan is the same scan -> partial agg -> final agg as SQL11/A1,
     with the shipdate filter pushed to the parquet scan."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(
         f"""
@@ -1249,7 +1216,6 @@ def lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     a window/rank over a join on o_custkey, i.e. the same single
     shuffle W1 pays, NOT |customer| subquery executions. That rewrite
     is what makes the SQL-standard form safe at 100 TB."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(_SQL33)
 
@@ -1285,7 +1251,6 @@ def pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     never one pass per pivot value; the IN list must be literal
     (enumerated columns at plan time), which is what bounds the output
     schema at 100 TB."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     return spark.sql(
         """

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.determinism import MONEY2, dsum, sql_dsum
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 from test_dataengineer2026_spark.streaming.jobs import (
     read_events_stream,
     read_staged_stream,
@@ -135,7 +134,6 @@ GROUP BY 1, 2
 def tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1+M2: watermarked tumbling-window aggregation (1 hour) per event
     type, complete output mode."""
-    apply_runtime_confs(spark)
     s = read_events_stream(spark, sf_dir)
     agg = (
         s.withWatermark("ts", "1 hour")
@@ -176,7 +174,6 @@ GROUP BY 1
 def sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M3: sliding windows (1 hour wide, 30 min slide) — each event lands
     in two windows; oracle enumerates both candidate starts per event."""
-    apply_runtime_confs(spark)
     s = read_events_stream(spark, sf_dir)
     agg = (
         s.groupBy(F.window("ts", "1 hour", "30 minutes"))
@@ -225,7 +222,6 @@ GROUP BY user_id, session_id
 def session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M4: per-user session windows with a 30-minute inactivity gap —
     the streaming state-store sessionization; oracle = gaps-and-islands."""
-    apply_runtime_confs(spark)
     s = read_events_stream(spark, sf_dir)
     agg = (
         s.groupBy(F.session_window("ts", "30 minutes"), "user_id")
@@ -259,7 +255,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M5: streaming dropDuplicates — emits each (user, event_type) key
     once across the whole stream (state-store backed; with a watermark,
     dropDuplicatesWithinWatermark bounds that state at scale)."""
-    apply_runtime_confs(spark)
     s = read_events_stream(spark, sf_dir)
     dedup = s.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
@@ -304,7 +299,6 @@ def stateful_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M6: custom stateful operator via applyInPandasWithState — a
     per-user signup->purchase funnel state machine (events are sorted by
     (ts, event_id) inside the state function for determinism)."""
-    apply_runtime_confs(spark)
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     s = read_events_stream(spark, sf_dir)
@@ -398,7 +392,6 @@ def transform_with_state_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     install, so pbcompat.ensure() shims in the baked Cloud SDK's
     pure-Python protobuf 6.32 (see pbcompat/sitecustomize.py). On a
     real cluster `pip install protobuf` makes ensure() a no-op."""
-    apply_runtime_confs(spark)
     from test_dataengineer2026_spark import pbcompat
 
     if not pbcompat.ensure(spark):
@@ -523,7 +516,6 @@ def tws_timer_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the per-key cost is constant and the no-data batch's
     timer sweep is range-scan-ordered by expiry, not a full state scan.
     """
-    apply_runtime_confs(spark)
     from test_dataengineer2026_spark import pbcompat
 
     if not pbcompat.ensure(spark):
@@ -624,7 +616,6 @@ def tws_processing_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep is expiry-ordered, not a full state scan. Wall-clock timers
     are the only way to bound output latency when a key's feed simply
     stops — event-time timers never fire without new data."""
-    apply_runtime_confs(spark)
     from test_dataengineer2026_spark import pbcompat
 
     if not pbcompat.ensure(spark):
@@ -672,7 +663,6 @@ GROUP BY c.c_mktsegment
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M7: stream-static enrichment — the static dimension is broadcast
     into every micro-batch; aggregation runs in complete mode."""
-    apply_runtime_confs(spark)
     s = read_events_stream(spark, sf_dir)
     c = tables.load(spark, sf_dir, "customer")
     agg = (
@@ -701,7 +691,6 @@ def stream_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumed one file per micro-batch (maxFilesPerTrigger=1, oldest
     mtime first), the production pattern for newly landed PDFs/objects
     (TEST.md:65); complete-mode counts must equal the batch answer."""
-    apply_runtime_confs(spark)
     s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))
     agg = s.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     return run_to_memory(
@@ -729,10 +718,9 @@ def foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    apply_runtime_confs(spark)
-    from test_dataengineer2026_spark.queries.sources_q import _stage
+    from test_dataengineer2026_spark.staging import staged_dir
 
-    out = _stage("s10_foreach_batch", sf_dir)
+    out = os.path.join(staged_dir(sf_dir, "sink_stage"), "s10_foreach_batch")
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
 
@@ -773,7 +761,6 @@ def watermark_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing windows are withheld at end-of-stream. This is the state
     eviction contract that bounds memory at 100 TB: closed windows leave
     the state store, open ones stay."""
-    apply_runtime_confs(spark)
     s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))
     agg = (
         s.withWatermark("ts", "2 days")
@@ -811,7 +798,6 @@ def late_data_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first split boundary may appear. (The batch-side quarantine of
     the dropped set — an anti-join of source vs admitted — is shown in
     tests/test_streaming.py.)"""
-    apply_runtime_confs(spark)
     s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "late"))
     agg = (
         s.withWatermark("ts", "2 days")
@@ -847,7 +833,6 @@ def trigger_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     the backlog as one bounded run of single-file micro-batches (the
     backfill-then-stop pattern); the observed (batch_id, row-count)
     sequence must equal the staged file split exactly."""
-    apply_runtime_confs(spark)
     s = read_staged_stream(
         spark, stage_split_feed(spark, sf_dir, "multi"), files_per_trigger=1
     )
@@ -890,7 +875,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Inner join + append mode means results are emission-order- and
     batch-split-independent, so the batch self-join oracle recomputes
     them exactly."""
-    apply_runtime_confs(spark)
     views = (
         read_events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -974,7 +958,6 @@ def chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier reads the (tiny) closed-hour stream, not the events firehose."""
     from test_dataengineer2026_spark.determinism import dec, dnarrow
 
-    apply_runtime_confs(spark)
     s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))
     hourly = (
         s.withWatermark("ts", "2 days")
@@ -1037,7 +1020,6 @@ def stream_observability(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch regardless of data volume."""
     from test_dataengineer2026_spark.streaming.jobs import MetricsListener
 
-    apply_runtime_confs(spark)
     listener = MetricsListener()
     listener.attach(spark)
     try:
@@ -1134,7 +1116,6 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     hours of the stream stay in state and are (correctly) withheld at
     shutdown — the oracle replays that rule semantically. Matched pairs emit exactly as in M10. Bounded state on
     both sides is what makes the outer join runnable forever."""
-    apply_runtime_confs(spark)
     views = (
         read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))
         .filter(F.col("event_type") == "view")
@@ -1240,7 +1221,6 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the interval + watermark delay, eviction is what makes the join
     runnable forever; full outer adds no state, only the two
     null-emission paths at eviction time."""
-    apply_runtime_confs(spark)
     views = (
         read_staged_stream(spark, stage_split_feed(spark, sf_dir, "multi"))
         .filter(F.col("event_type") == "view")
@@ -1300,7 +1280,6 @@ def dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     forever. At 100 TB/day the horizon IS the ops knob: state ~=
     keys-per-horizon, replays inside it are absorbed, older replays
     would re-emit and belong to the reconciliation tier instead."""
-    apply_runtime_confs(spark)
     s = read_staged_stream(spark, stage_split_feed(spark, sf_dir, "dups"))
     dedup = (
         s.withWatermark("ts", "60 days")
@@ -1357,7 +1336,6 @@ def checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage_events_resume,
     )
 
-    apply_runtime_confs(spark)
     layout = stage_events_resume(spark, sf_dir)
 
     def run_once() -> None:
@@ -1441,7 +1419,6 @@ def statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     provider conf is set for the bounded run and restored (the reader
     itself resolves the store format from checkpoint metadata and needs
     no session conf)."""
-    apply_runtime_confs(spark)
     import os
 
     from test_dataengineer2026_spark import pbcompat
@@ -1543,7 +1520,6 @@ def timer_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay. The reader resolves the store format from checkpoint
     metadata; the RocksDB conf is only needed to RUN the upstream
     query."""
-    apply_runtime_confs(spark)
     import os
 
     from test_dataengineer2026_spark import pbcompat

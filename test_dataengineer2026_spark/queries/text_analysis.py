@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.functions.text import tokens
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 # Tiny per-language stopword profiles (public-knowledge function words).
 STOPWORDS = {
@@ -49,7 +48,6 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T: token counting — whitespace tokens and a regex token pattern
     (the BPE-ish pre-tokenizer shape), plus a QA cross-check against the
     declared n_chars column (TEST.md:119 'does it extract correctly')."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -101,7 +99,6 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     |distinct tokens ∩ stopword set|, argmax with a fixed priority order
     for deterministic ties. (The harness corpus is same-vocab word soup,
     so this mostly demonstrates the pipeline + accuracy reporting.)"""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     toks = F.array_distinct(tokens("text"))
     scores = {
@@ -151,7 +148,6 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T: document quality signals — length band, mean token length,
     type-token ratio, stopword coverage — the standard pretraining-corpus
     filter features; each an integer ratio (single fp divide)."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     tok = F.split("text", " ")
     toks_d = F.array_distinct(tok)
@@ -188,7 +184,6 @@ def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T: document fingerprints — canonical vocabulary fingerprint
     (sorted distinct tokens) and a positional prefix fingerprint; both
     portable md5 so clustering on them is engine-independent."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     tok = F.split("text", " ")
     return d.select(
@@ -241,7 +236,6 @@ def tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes the join's left side shuffled — one fewer full pass either
     way. Only the 1-row doc count is broadcast.
     """
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     tf = (
         d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
@@ -304,7 +298,6 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     individual operators exist for; at 100 TB it is one scan, one
     window shuffle on the 16-byte content hash, and one partial+final
     aggregation — document text never shuffles."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     tok = F.split("text", " ")
     n_tokens = F.size(tok).cast("long")
@@ -378,7 +371,6 @@ def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-grams, count per (doc, n, gram), re-aggregate per doc — so the
     heavy table is (doc_id, gram, count), never raw text; every count is
     an integer and each fraction is a single final division."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
 
     def grams(n: int):
@@ -456,7 +448,6 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     family, and a small single-file scan would pin it all to one task —
     the same rationale as D2's shingle pass. r18 measured: 4.6 s on 1
     task -> 0.74 s warm at sf0.1."""
-    apply_runtime_confs(spark)
     d = tables.widen_if_narrow(tables.load(spark, sf_dir, "documents"), "doc_id")
     hs = F.expr(
         f"transform(sequence(1, length(text) - {WINNOW_K - 1}), "
@@ -515,7 +506,6 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen scalar work: zero exchanges, text never leaves its scan
     partition; at 100 TB this runs at scan speed like every T-family
     op."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     raw = F.concat(
         F.col("text"),
@@ -566,7 +556,6 @@ def text_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     punctuation, ragged spacing) from the clean corpus in both engines,
     so the oracle proves the normalizer actually earns its keep.
     Scalar codegen only — scan-speed at any scale."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     messy = F.concat(
         F.lit("  <<"), F.upper(F.substring("text", 1, 16)), F.lit(">>!!!  "),
@@ -626,7 +615,6 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-order array functions, zero UDFs, zero exchanges: the
     classifier runs at scan speed and the keep flag is ready for a
     partitioned sink."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     nw = F.size(toks).cast("double")
@@ -698,7 +686,6 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     is vocabulary-sized — joined on token WITHOUT a broadcast hint (the
     T5 lesson: vocabularies are unbounded; AQE may still choose to
     broadcast a small one) and the 1-row total IS broadcast."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("t"))
     uni = tok.groupBy("t").agg(F.count(F.lit(1)).alias("cnt"))
@@ -762,7 +749,6 @@ def bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence call (Spark's sequence(1, 0) auto-steps backwards rather
     than returning empty — the T7 gotcha).
     """
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     words = d.select(
         F.explode(F.split("text", " ")).alias("w")
@@ -823,7 +809,6 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     table), the two count tables are vocabulary²- and vocabulary-sized
     equi-joins on the bigram key — no broadcast of unbounded state, the
     same posture the T5 fix established."""
-    apply_runtime_confs(spark)
     from pyspark.sql import Window as W
 
     d = tables.load(spark, sf_dir, "documents")
@@ -901,7 +886,6 @@ def zipf_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB, and only the top-100 survive, so a TakeOrdered pre-cut
     could bound even that; the unpartitioned window never sees a
     data-sized input."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     tf = (
         d.select(F.explode(tokens("text")).alias("term"))

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.determinism import dsum, sql_dsum
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 _OBS_SQL = f"""
   SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS day,
@@ -98,7 +97,6 @@ def gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-computed, so cross-engine determinism reduces to TS0 aggregation
     determinism (exact decimal sums, determinism.py).
     """
-    apply_runtime_confs(spark)
     filled = _densified(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
@@ -163,7 +161,6 @@ def linear_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically on both engines (same op order, same casts) so IEEE-754
     evaluation is bit-equal given bit-equal inputs.
     """
-    apply_runtime_confs(spark)
     filled = _densified(spark, sf_dir)
     wb = (
         Window.partitionBy("user_id")
@@ -245,7 +242,6 @@ def rolling_zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming-ingest health gate run as a batch: no self-joins, no UDFs,
     whole chain in codegen.
     """
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     obs = e.groupBy(
         "user_id", F.date_trunc("day", F.col("ts")).cast("date").alias("day")
@@ -315,7 +311,6 @@ def ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the bar key. The event_id tiebreak makes simultaneous ticks
     deterministic on every engine; at 100 TB this is the query that
     turns a trillion ticks into millions of bars in a single pass."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     key = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
     return (
@@ -384,7 +379,6 @@ def time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEAD, then a map-side-combinable integer aggregation — the same
     cost profile as any sessionization pass; nothing is proportional
     to wall-clock span."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seg = e.select(
@@ -463,7 +457,6 @@ def dow_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream ever sees raw events. (Weekday numbering pinned to
     Spark's dayofweek, Sunday=1; the oracle shifts DuckDB's Sunday=0.)
     """
-    apply_runtime_confs(spark)
     ev = tables.load(spark, sf_dir, "events")
     daily = (
         ev.select(

@@ -23,7 +23,6 @@ from pyspark.sql import types as T
 
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 
 @F.pandas_udf(T.DoubleType())
@@ -55,7 +54,6 @@ FROM embeddings
 )
 def scalar_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V1: Arrow-batched scalar UDF over the embedding column."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "embeddings")
     return e.select(
         "vec_id", "label", F.round(l2_norm_udf("embedding"), 9).alias("norm")
@@ -77,7 +75,6 @@ def grouped_map_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V2: applyInPandas grouped-map — per-nation min-max normalization
     (per-doc table assembly shape, TEST.md:83). min/max are exact, the
     normalize is one subtract + one divide per row."""
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer")
 
     def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -124,7 +121,6 @@ GROUP BY l_returnflag
 def grouped_agg_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V3: custom aggregate — the spec's tonnage-weighted grade mean
     (TEST.md:38-48) expressed as a Pandas UDAF."""
-    apply_runtime_confs(spark)
     li = tables.load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         weighted_avg_disc_udf("l_quantity", "l_discount").alias("wavg_discount")
@@ -151,7 +147,6 @@ def python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V4: one-to-many generation (document -> 10-token training chunks),
     as an array-returning Pandas UDF + posexplode — the UDTF pattern
     (SURVEY §2.11 V4) with Arrow batching."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
@@ -208,7 +203,6 @@ def map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     as V5: one ArrowEvalPython-style exchange-free map stage at source
     width — the right tier for byte-level multimodal preprocessing
     where pandas object-dtype boxing would double memory."""
-    apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
     return d.mapInArrow(
         _arrow_doc_stats,
@@ -288,7 +282,6 @@ def cogrouped_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     NETWORK cost is exactly two co-partitioned shuffles, same as a SQL
     join.
     """
-    apply_runtime_confs(spark)
     # Width must track the PYTHON work, not the shuffle bytes: the body
     # runs once per key (~15k keys at sf0.1), and AQE's byte-based
     # coalescing packs those calls onto 2-3 tasks (the keyed rows are
@@ -346,7 +339,6 @@ def apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     group-wise NUMERIC kernels at 100 TB where pandas per-group
     overhead (index allocation, block consolidation) measurably taxes
     small groups."""
-    apply_runtime_confs(spark)
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -408,7 +400,6 @@ def class_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: a UDTF is a per-partition generator — no shuffle is
     introduced by the LATERAL; output cardinality (~tokens/10 per doc)
     is the workload, identical to V4's."""
-    apply_runtime_confs(spark)
     from pyspark.sql.functions import udtf
 
     spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
@@ -457,7 +448,6 @@ def polymorphic_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     relationally. analyze() asserts the argument is a foldable constant
     — a column-dependent n would make the schema data-dependent, which
     the API (and relational algebra) forbids."""
-    apply_runtime_confs(spark)
     from pyspark.sql.functions import udtf
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
     from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
@@ -527,7 +517,6 @@ def pandas_api_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     + immediate to_spark keeps it out of the plan. ANSI off comes from
     RUNTIME_CONFS (the pandas API's permissive-cast contract).
     """
-    apply_runtime_confs(spark)
     import pyspark.pandas as ps
 
     pdf = ps.read_parquet(f"{sf_dir}/orders.parquet")
@@ -579,7 +568,6 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical exchange shape to a window query; the UDTF runs
     arrow-batched per group. State is two scalars per group,
     independent of group size."""
-    apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
     from pyspark.sql.functions import udtf
 

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.determinism import FINAL, MONEY2, dec, dnarrow
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
 
 
 @register(
@@ -42,7 +41,6 @@ SELECT * FROM (
 def rank_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1: top-3 customers by balance per nation with row_number / rank /
     dense_rank (the 'rank resources by contained metal within doc' shape)."""
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer")
     w = W.partitionBy("c_nationkey").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey")
@@ -73,7 +71,6 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 )
 def lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2: event-to-event deltas per user — sessionization prep."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     micros = F.unix_micros("ts")
@@ -107,7 +104,6 @@ def running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Running sums use the exact-decimal trick per frame so every row's
     value is bit-deterministic regardless of engine summation order.
     """
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     base = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     cum = base.rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -144,7 +140,6 @@ def ntile_percent(spark: SparkSession, sf_dir: str) -> DataFrame:
     percent_rank = (rank-1)/(n-1): both factors are exact ints, and the
     single division is deterministic.
     """
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer")
     w = W.partitionBy("c_nationkey").orderBy("c_acctbal", "c_custkey")
     return c.select(
@@ -173,7 +168,6 @@ def ntile_percent_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     window serializes the sort to one task — acceptable for a 15k-row
     dimension, never for a fact table; at scale use W4 (per-key ntile)
     or approx quantiles (A9/A4/C8)."""
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer")
     w = W.orderBy("c_acctbal", "c_custkey")
     return c.select(
@@ -199,7 +193,6 @@ FROM (
 def dedup_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W5: keep the newest row per key — dedup across extraction re-runs
     (TEST.md:161 retries produce duplicate doc rows; keep latest run)."""
-    apply_runtime_confs(spark)
     o = tables.load(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(
         F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
@@ -256,7 +249,6 @@ def cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction of a Kafka CDC topic into the lakehouse snapshot, and
     the changelog unions never shuffle individually (union is plan-free;
     the single window exchange partitions the merged stream once)."""
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer")
 
     def batch(filt, name, bal, op, seq):
@@ -367,7 +359,6 @@ def scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     territory. As-of lookups against the result are J10's asof join on
     (key, valid_from).
     """
-    apply_runtime_confs(spark)
     c = tables.load(spark, sf_dir, "customer")
     eff = F.lit(_SCD2_EFF).cast("date")
     upd = c.filter(F.col("c_custkey") % 7 == 0).select(
@@ -433,7 +424,6 @@ def activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction. Scale: one shuffle on user_id for the distinct +
     window (same partitioning reused), then two map-side-combinable
     aggregations; nothing is proportional to the calendar span."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     days = e.select(
         "user_id", F.date_trunc("day", F.col("ts")).cast("date").alias("day")
@@ -484,7 +474,6 @@ def trailing_time_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on user_id + one per-user sort; the running
     frame is maintained incrementally per partition (add arriving rows,
     evict aged ones) — never a per-row rescan."""
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     s = e.select(
         "event_id",
@@ -554,7 +543,6 @@ def pattern_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the window form is the only sane one. Deterministic: MIN is
     tie-free, and the rn=1 collapse picks from identical per-user rows.
     """
-    apply_runtime_confs(spark)
     e = tables.load(spark, sf_dir, "events")
     s = e.select(
         "user_id",

@@ -16,10 +16,13 @@ value hash, so:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from test_dataengineer2026_spark.session import apply_runtime_confs
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -42,13 +45,26 @@ def register(
     tags: tuple[str, ...] = (),
     doc: str = "",
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register ``fn`` as the Spark side of query ``name``."""
+    """Decorator: register ``fn`` as the Spark side of query ``name``.
+
+    Returns (and registers) a wrapper that pins the runtime confs on the
+    caller's session before ``fn`` builds anything, so a query's result
+    never depends on the session it is handed: the verification driver
+    builds its own (see ``session.apply_runtime_confs``). Bind the
+    result to the module-level name, so a direct call gets the same
+    confs as a registry lookup."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, tags=tags, doc=doc or (fn.__doc__ or ""))
-        return fn
+
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            apply_runtime_confs(spark)
+            return fn(spark, sf_dir)
+
+        _REGISTRY[name] = QuerySpec(name=name, fn=run, oracle=oracle, tags=tags, doc=doc or (fn.__doc__ or ""))
+        return run
 
     return deco
 

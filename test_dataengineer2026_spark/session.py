@@ -103,7 +103,10 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Re-apply runtime-settable confs to an externally provided session.
 
     The verification driver builds its own SparkSession; query results must
-    not depend on that session's timezone or Arrow settings.
+    not depend on that session's timezone or Arrow settings. Every
+    registered query runs this first because ``registry.register`` wraps
+    it; code that uses the primitives without the registry calls it
+    itself.
     """
     for k, v in RUNTIME_CONFS.items():
         try:

@@ -1,5 +1,6 @@
 """Per-process staging directories for queries that must materialize an
-intermediate store (F9d's VARIANT parquet, S18's PDF corpus).
+intermediate store (F9d's VARIANT parquet, S18's PDF corpus, the S-, N-
+and MM3 sink round-trips under ``sink_stage``).
 
 Why this exists: some exhibits are round-trips by design — the query
 WRITES a store and reads it back, proving the format survives. The
@@ -40,7 +41,10 @@ import time
 #: dirs under .tmp/<kind>/ never match and are never pruned.
 _STAGE_NAME_RE = re.compile(r"[0-9a-f]{10}-[0-9]+")
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+#: The repo-local scratch root every stage lives under: the per-process
+#: ``staged_dir`` stores here and the reusable stream feeds of
+#: ``streaming/jobs.py``.
+TMP_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
 
 #: Dirs this process has registered an atexit reaper for — guards
 #: against stacking one atexit entry per query call.
@@ -92,8 +96,8 @@ def _prune_siblings(root: str) -> None:
 
 
 def stage_tag(sf_dir: str) -> str:
-    """The name that keys the reusable stages of ``sf_dir`` (the stream
-    feeds and the sink round-trips): ``<absolute sf_dir with "/" ->
+    """The name that keys the reusable stream-feed stages of ``sf_dir``
+    (``streaming/jobs.py``): ``<absolute sf_dir with "/" ->
     "_">-<md5[:10]>``. The path is made absolute first, so one relative
     ``sf_dir`` used from two working directories gets two stages. The
     readable prefix lets a caller glob every stage of one ``sf_dir``;
@@ -109,7 +113,7 @@ def staged_dir(sf_dir: str, kind: str) -> str:
     ``<repo>/.tmp/<kind>/``, pruning dead/stale siblings and arming the
     atexit reaper for our own dir. The dir itself is NOT created — the
     writer (Spark, or a data source's commit) owns creation."""
-    root = os.path.join(_REPO_ROOT, ".tmp", kind)
+    root = os.path.join(TMP_ROOT, kind)
     _prune_siblings(root)
     own = os.path.join(root, f"{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}-{os.getpid()}")
     if own not in _DIRS_TO_REAP:

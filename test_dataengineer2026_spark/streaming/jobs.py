@@ -30,15 +30,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from test_dataengineer2026_spark import tables
-from test_dataengineer2026_spark.staging import stage_tag
+from test_dataengineer2026_spark.staging import TMP_ROOT, stage_tag
 
 EVENTS_SCHEMA = (
     "event_id long, ts long, user_id long, event_type string, value double, "
     "props string"
 )
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_STAGE_ROOT = os.path.join(_REPO_ROOT, ".tmp", "stream_stage")
+_STAGE_ROOT = os.path.join(TMP_ROOT, "stream_stage")
 
 
 def _stage_dir(sf_dir: str, suffix: str) -> str:

@@ -126,9 +126,10 @@ def test_v12_restores_ansi_and_timezone_contract(spark):
     speaks timestamp_ntz for dates — a future driver window that
     schedules V12 immediately before an ANSI-sensitive SQL query must
     not inherit drifted session state. The contract is that EVERY
-    query opens with apply_runtime_confs, so V12 itself must leave the
-    session on the RUNTIME_CONFS settings (ANSI off, UTC) even when it
-    starts from a sabotaged session."""
+    registered query runs under apply_runtime_confs (``registry.register``
+    wraps it), so V12 itself must leave the session on the RUNTIME_CONFS
+    settings (ANSI off, UTC) even when it starts from a sabotaged
+    session."""
     from test_dataengineer2026_spark.registry import queries
 
     spark.conf.set("spark.sql.ansi.enabled", "true")

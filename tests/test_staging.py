@@ -97,9 +97,30 @@ def test_stage_tag_resolves_a_relative_sf_dir(tmp_path, monkeypatch):
 
 
 def test_sink_stages_of_alike_flattening_sf_dirs_do_not_collide():
-    """``/x/a_b`` and ``/x/a/b`` flatten alike; the S8/S-family and N-family
-    sink round-trips must still write them to two stage directories."""
-    from test_dataengineer2026_spark.queries import nested_q, sources_q
+    """``/x/a_b`` and ``/x/a/b`` flatten alike; the S-, N- and MM3 sink
+    round-trips must still write them to two stage directories."""
+    assert staging.staged_dir("/x/a_b", "sink_stage") != staging.staged_dir("/x/a/b", "sink_stage")
 
-    for mod in (sources_q, nested_q):
-        assert mod._stage("out", "/x/a_b") != mod._stage("out", "/x/a/b"), mod.__name__
+
+def _tree(root):
+    return {
+        (os.path.join(d, f), os.stat(os.path.join(d, f)).st_mtime_ns)
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
+def test_sink_round_trip_writes_to_this_process_stage(spark):
+    """S1's store lies in this process's ``sink_stage`` (pruned and reaped
+    with it), and nothing is written under the shared, never-removed
+    ``.tmp/sink_stage/<stage_tag>`` that another process may be reading."""
+    from test_dataengineer2026_spark import registry
+    from tests.conftest import SF_DIR
+
+    own = staging.staged_dir(SF_DIR, "sink_stage")
+    shared = os.path.join(os.path.dirname(own), staging.stage_tag(SF_DIR))
+    before = _tree(shared)
+    rows = registry.all_specs()["S1_binary_file_scan"].fn(spark, SF_DIR).collect()
+    assert rows[0]["n_files"] == 1
+    assert os.path.isdir(os.path.join(own, "docs_text_bin"))
+    assert _tree(shared) == before
